@@ -130,7 +130,12 @@ object Dlq {
   /** Retention purge — drop rows older than the cutoff.
     * Ref: DeadLetterService.cs:146-161. */
   def purgeExpired(dlq: DataFrame, now: Column, retentionDays: Int = 60): DataFrame =
-    dlq.filter(col("timestamp") >= now - expr(s"INTERVAL $retentionDays DAY"))
+    dlq.filter(retained(now, retentionDays))
+
+  /** The rows [[purgeExpired]] keeps: not older than the cutoff. A null
+    * timestamp is not kept. */
+  def retained(now: Column, retentionDays: Int): Column =
+    col("timestamp") >= now - expr(s"INTERVAL $retentionDays DAY")
 
   /** F13 — threshold pre-warn at 75%: the monitor's alarm math.
     * Ref: DeadLetterMonitor.cs:123-148. */

@@ -29,6 +29,17 @@ object Incremental {
   def horizonGate(changes: DataFrame, horizon: Long, xactCol: String = "xact_id"): DataFrame =
     changes.filter(col(xactCol) < horizon)
 
+  /** P2's default horizon for a change snapshot the caller already holds
+    * and knows of no in-flight transaction in: everything in it is
+    * committed. The constant `Long.MaxValue`, not a `max(xact_id) + 1`
+    * probe: against the same snapshot both gates admit exactly the rows
+    * with a non-null `xact_id`, but the probe costs a Spark job per call and
+    * overflows (ANSI `ARITHMETIC_OVERFLOW`) when that max is `Long.MaxValue`.
+    * The gate is strict, so an `xact_id` of `Long.MaxValue` itself reads as
+    * never committed. Callers that can see in-flight transactions pass the
+    * real horizon instead. */
+  def committedHorizon(changes: DataFrame): Long = Long.MaxValue
+
   /** P1 + P2 — one incremental read cycle. */
   def incrementalRead(changes: DataFrame, fromVersion: Long, horizon: Long): DataFrame =
     horizonGate(sinceVersion(changes, fromVersion), horizon)

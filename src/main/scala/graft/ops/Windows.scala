@@ -31,20 +31,29 @@ object Windows {
     * `orderCol` ordering distributed (the DLQ-id pattern); `totalRows`
     * comes from the caller, which already counted the batch — no extra
     * count job beyond zipWithIndex's internal partition-size pass over the
-    * (already shuffled) sorted data. */
+    * (already shuffled) sorted data.
+    *
+    * When `totalRows ≤ n` every row is batch 0, so the rows come back
+    * unsorted with constant columns and no job runs; the range sample and
+    * the zipWithIndex count run only when there really are several
+    * batches. Order within a batch is the consumer's job (the relay's
+    * `Envelope.encode` sorts each envelope by version). */
   def numberBatchesRange(rows: DataFrame, orderCol: String, n: Int,
                          totalRows: Long): DataFrame = {
     require(n > 0, "batch size must be positive")
-    val spark = rows.sparkSession
     val total = ((totalRows + n - 1) / n).toInt
-    val ordered = rows.repartitionByRange(col(orderCol)).sortWithinPartitions(orderCol)
-    val schema = ordered.schema
-      .add("batch", org.apache.spark.sql.types.IntegerType, nullable = false)
-      .add("total_batches", org.apache.spark.sql.types.IntegerType, nullable = false)
-    spark.createDataFrame(
-      ordered.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i / n).toInt :+ total) },
-      schema)
+    if (totalRows <= n)
+      rows.withColumn("batch", lit(0)).withColumn("total_batches", lit(total))
+    else {
+      val ordered = rows.repartitionByRange(col(orderCol)).sortWithinPartitions(orderCol)
+      val schema = ordered.schema
+        .add("batch", org.apache.spark.sql.types.IntegerType, nullable = false)
+        .add("total_batches", org.apache.spark.sql.types.IntegerType, nullable = false)
+      rows.sparkSession.createDataFrame(
+        ordered.rdd.zipWithIndex().map { case (r, i) =>
+          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i / n).toInt :+ total) },
+        schema)
+    }
   }
 
   /** A8/W3/O5 — size-capped directory cleanup: keep newest files whose

@@ -356,7 +356,10 @@ object ChangeV2 {
 
   /** The transaction horizon (P2's gate value): `min(active xact)` where the
     * deployment can see it (override via `horizonSql`), else the committed
-    * frontier `MAX(xact)+1` — the same default OutboxSource uses.
+    * frontier `MAX(xact)+1`. This is a real query, unlike the constant
+    * `Incremental.committedHorizon` that OutboxSource and ChangeRelay
+    * default to: they gate a snapshot they already hold, while this
+    * horizon is part of an offset over a table that keeps growing.
     *
     * DEPLOYMENT INVARIANT for the default: rows must become VISIBLE in
     * version order (e.g. versions assigned at commit, or a serial writer).

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.ops.Incremental
 
 /** Source contracts: the pluggable procedure-shaped source (U1/S1) and its
@@ -35,7 +34,7 @@ trait ChangeSource {
   * procedure call (no Catalyst strategy can push a procedure invocation, so
   * that flavor is a driver-side fetch per micro-batch — SURVEY §4). */
 final class OutboxSource(outbox: () => DataFrame,
-                         horizonOf: DataFrame => Long = OutboxSource.committedHorizon)
+                         horizonOf: DataFrame => Long = Incremental.committedHorizon)
     extends ChangeSource {
 
   override def fetch(spark: SparkSession, fromVersion: Long, mode: SyncMode.Value): DataFrame = {
@@ -55,12 +54,6 @@ final class OutboxSource(outbox: () => DataFrame,
     Incremental.gatedWatermark(df, 0L, horizonOf(df))
       .collect()(0).getLong(0)
   }
-}
-
-object OutboxSource {
-  /** Everything visible is committed (tests inject real horizons). */
-  def committedHorizon(df: DataFrame): Long =
-    df.agg(coalesce(max("xact_id") + 1, lit(Long.MaxValue))).collect()(0).getLong(0)
 }
 
 /** S1 (JDBC flavor), guard-level: renders the dialect call + parameter the

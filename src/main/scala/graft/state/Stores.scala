@@ -192,13 +192,16 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
 
   /** Purge dead letters older than the retention window (reference
     * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
-    * is only rewritten when something was actually purged. */
+    * is only rewritten when something was actually purged. The count is
+    * ONE aggregate — rows minus rows [[Dlq.retained]] keeps — so a replay
+    * cycle with nothing to purge costs one job, not two full counts. */
   def purgeExpiredDeadLetters(now: java.sql.Timestamp,
       retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long = {
     val before = deadLetters
-    val kept = Dlq.purgeExpired(before, lit(now), retentionDays)
-    val purged = before.count() - kept.count()
-    if (purged > 0) commit("dead_letters", kept)
+    val purged = before
+      .agg(count(lit(1)) - count_if(Dlq.retained(lit(now), retentionDays)))
+      .head().getLong(0)
+    if (purged > 0) commit("dead_letters", Dlq.purgeExpired(before, lit(now), retentionDays))
     purged
   }
 }

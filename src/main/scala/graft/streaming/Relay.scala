@@ -38,14 +38,12 @@ final class ChangeRelay(
     * invariant a spec can assert against the envelope count. */
   @volatile var lastCycleExecutorEnvelopes: Long = 0L
 
-  /** One micro-batch cycle for one object over the current change table.
+  /** One micro-batch cycle for one object over the current change table —
+    * [[runCycles]] over that one object, so the per-micro-batch streaming
+    * drivers run the same code path as a batched cycle.
     * Returns (rows exported, new watermark). */
   def runCycle(obj: TrackingObject, changes: DataFrame, nowUtc: String): (Long, Long) =
-    cycleCore(obj, changes, nowUtc,
-      lookup = o => store.getWatermark(config.name, o),
-      commitWm = (o, v) => store.setWatermark(config.name, o, v),
-      isPaused = (envScope, objScope) =>
-        store.pauses.filter(col("scope").isin(envScope, objScope)).limit(1).count() > 0)
+    runCycles(Seq(obj -> changes), nowUtc)(obj.name)
 
   /** EVERY tracked object of the environment in one polling cycle — the
     * reference's per-cycle object loop (ChangeTrackingBackgroundService.cs
@@ -54,32 +52,35 @@ final class ChangeRelay(
     * watermark and pause tables are each read ONCE up front, and every
     * object's watermark advance lands in a single batched
     * [[ParquetStateStore.setWatermarks]] snapshot commit at the end
-    * (per-object [[runCycle]] commits per call — O(objects) rewrites of an
-    * O(objects) table per cycle). At-least-once (T2) is unchanged: the
-    * batched commit still happens only AFTER every object's export attempt;
-    * a crash mid-cycle loses only un-committed advances, which re-poll —
-    * re-export, never loss. Returns per-object (rows exported, watermark). */
+    * (committing per object would rewrite the O(objects) table once per
+    * object — O(objects²) row writes per cycle). At-least-once (T2) is
+    * unchanged: the batched commit still happens only AFTER every object's
+    * export attempt; a crash mid-cycle loses only un-committed advances,
+    * which re-poll — re-export, never loss. Returns per-object (rows
+    * exported, watermark). */
   def runCycles(objects: Seq[(TrackingObject, DataFrame)],
       nowUtc: String): Map[String, (Long, Long)] = {
     val wm = store.watermarks
-      .select("environment_name", "object_name", "last_version").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      .filter(col("environment_name") === config.name)
+      .select("object_name", "last_version").as[(String, Long)].collect().toMap
     val pausedScopes = store.pauses.select("scope").as[String].collect().toSet
-    // Deferred advances, visible to later lookups in the same cycle.
+    val envScope = s"env:${config.name.toLowerCase}"
+    // Deferred advances, visible to later objects of the same cycle.
     val pending = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // Flush in a finally: an exception on one object's export must not
     // discard EARLIER objects' successful advances — without this, one
     // failing object forces every object of the cycle to re-export next
     // time (at-least-once still held, but duplicate amplification grew
-    // with object count; per-object runCycle confines re-export to the
-    // failing object, and so does this).
+    // with object count). Re-export stays confined to the failing object.
     try {
       objects.map { case (obj, changes) =>
-        obj.name -> cycleCore(obj, changes, nowUtc,
-          lookup = o => pending.get(o).orElse(wm.get((config.name, o))),
-          commitWm = (o, v) => pending(o) = v,
-          isPaused = (envScope, objScope) =>
-            pausedScopes.contains(envScope) || pausedScopes.contains(objScope))
+        val stored = pending.get(obj.name).orElse(wm.get(obj.name))
+        val objScope = s"obj:${config.name.toLowerCase}/${obj.name.toLowerCase}"
+        // P7 — pause scopes short-circuit before any work.
+        obj.name ->
+          (if (pausedScopes.contains(envScope) || pausedScopes.contains(objScope))
+            (0L, stored.getOrElse(0L))
+          else cycleCore(obj, changes, nowUtc, stored, pending))
       }.toMap
     } finally {
       if (pending.nonEmpty)
@@ -87,22 +88,18 @@ final class ChangeRelay(
     }
   }
 
-  /** The cycle body with the control-state accesses injected, so the
-    * per-object and batched-cycle drivers share one implementation. */
+  /** One object's cycle body: read from its `stored` watermark, export, and
+    * record any advance in `pending` for [[runCycles]] to commit. With
+    * rows to export it runs two Spark queries — the fused count + watermark
+    * aggregate and the export — plus the dead-letter append only when a
+    * sink failed: the default horizon is a constant, a batch that fits one
+    * envelope is numbered without a job, and the failure count rides the
+    * export job in an accumulator. */
   private def cycleCore(obj: TrackingObject, changes: DataFrame, nowUtc: String,
-      lookup: String => Option[Long],
-      commitWm: (String, Long) => Unit,
-      isPaused: (String, String) => Boolean): (Long, Long) = {
-    // P7 — pause scopes short-circuit before any work.
-    val envScope = s"env:${config.name.toLowerCase}"
-    val objScope = s"obj:${config.name.toLowerCase}/${obj.name.toLowerCase}"
-    if (isPaused(envScope, objScope)) {
-      val fv = lookup(obj.name).getOrElse(0L)
-      return (0L, fv)
-    }
-
+      stored: Option[Long],
+      pending: scala.collection.mutable.Map[String, Long]): (Long, Long) = {
     // T8/S7/S8 — missing watermark re-initializes per InitialSyncMode.
-    val fromVersion = lookup(obj.name) match {
+    val fromVersion = stored match {
       case Some(v) => v
       case None if obj.initialSyncMode.equalsIgnoreCase("Full") => 0L
       case None =>
@@ -110,7 +107,7 @@ final class ChangeRelay(
         // un-gated seed could skip rows of in-flight transactions forever.
         val seeded = Incremental.seed(changes, horizon = horizonOf(changes))
           .select("version").as[Long].head()
-        commitWm(obj.name, seeded)
+        pending(obj.name) = seeded
         return (0L, seeded)
     }
 
@@ -145,7 +142,8 @@ final class ChangeRelay(
       else {
         // numberBatchesRange, not the W2 window: a cycle numbers ONE
         // object's rows, so the per-group window would put the whole batch
-        // (a full initial sync) in a single task's sort.
+        // (a full initial sync) in a single task's sort. A batch that fits
+        // one envelope is numbered without a job.
         val envelopes = Envelope.encode(
           Windows.numberBatchesRange(rows, "version", config.maxRecordsPerBatch, batchRows)
             .withColumn("g", concat(col("g"), lit("#"), col("batch"))),
@@ -164,18 +162,23 @@ final class ChangeRelay(
         val plan = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
           nowUtc, totalBatches, fileSinkTemplate, config.endpoints,
           config.maxPayloadSizeBytes, performHttp, performAmqp)
-        val acc = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
+        val sc = spark.sparkContext
+        val acc = sc.longAccumulator("graft.relay.envelopesExportedOnExecutors")
+        val failed = sc.longAccumulator("graft.relay.exportFailures")
         val failures = envelopes.select("g", "envelope_json").as[(String, String)]
-          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, acc))
+          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, acc, failed))
           .toDF("error_message", "data")
         // Materialize exactly once: this job runs the sink fan-out on the
         // executors; only failure rows persist (executor-cached), so the
-        // isEmpty probe and the dead-letter append never re-run the export.
+        // dead-letter append never re-runs the export.
         val failDf = failures.localCheckpoint(true)
         // K9 — every failure dead-letters with D1 dedup. Each dead letter
         // carries ITS OWN envelope so replay re-sends exactly what failed
-        // (DeadLetterService.cs stores the Data JSON per failure).
-        if (!failDf.isEmpty) {
+        // (DeadLetterService.cs stores the Data JSON per failure). No
+        // emptiness probe: Spark merges a result task's accumulator updates
+        // once, from its successful attempt, so `failed` counts exactly the
+        // checkpointed failure rows.
+        if (failed.value > 0) {
           val fdf = failDf
             .withColumn("source_key", lit(s"${config.name}_${obj.name}_${obj.database}"))
             .withColumn("tracking_object_name", lit(obj.name))
@@ -191,7 +194,7 @@ final class ChangeRelay(
 
     // T2 — advance AFTER the export attempt, regardless of sink failures.
     if (newVersion > fromVersion)
-      commitWm(obj.name, newVersion)
+      pending(obj.name) = newVersion
     (exported, newVersion)
   }
 
@@ -253,7 +256,8 @@ object ChangeRelay {
   private[streaming] def exportPartition(
       plan: ExportPlan,
       it: Iterator[(String, String)],
-      executorEnvelopes: org.apache.spark.util.LongAccumulator): Iterator[(String, String)] =
+      executorEnvelopes: org.apache.spark.util.LongAccumulator,
+      failures: org.apache.spark.util.LongAccumulator): Iterator[(String, String)] =
     it.flatMap { case (g, json) =>
       if (org.apache.spark.TaskContext.get() != null) executorEnvelopes.add(1)
       val batchNo = g.substring(g.lastIndexOf('#') + 1).toInt
@@ -309,17 +313,18 @@ object ChangeRelay {
         }
         result.left.toSeq.map(f => (f.error, json))
       }
-      fileFailures ++ endpointFailures
+      val out = fileFailures ++ endpointFailures
+      failures.add(out.size.toLong)
+      out
     }
 
-  /** Default horizon: one past the max committed xact — everything visible
-    * commits; the gate only matters when the caller passes the true
-    * in-flight horizon (tests do). */
-  def defaultHorizon(changes: DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    changes.agg(coalesce(max("xact_id") + 1, lit(Long.MaxValue)))
-      .collect()(0).getLong(0)
-  }
+  /** Default horizon: [[Incremental.committedHorizon]], the constant
+    * `Long.MaxValue` — every row of the cycle's snapshot with a non-null
+    * `xact_id` is committed. No probe job runs, and an object whose max
+    * `xact_id` is `Long.MaxValue` cannot overflow a `max + 1`. The gate only
+    * matters when the caller passes the true in-flight horizon (tests and
+    * the `graft-change` DSv2 source do). */
+  def defaultHorizon(changes: DataFrame): Long = Incremental.committedHorizon(changes)
 
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as
     * a file stream and run the relay per micro-batch at the configured

@@ -110,11 +110,15 @@ class RelaySpec extends SparkSpec {
       cfg(Seq(failingHttp)).copy(maxPayloadSizeBytes = 5L),
       None, horizonOf = _ => 1000L)
     store.setWatermark("prod", "orders", 0L)
+    val beforeFailing = store.commitCount
     val (_, v) = relay.runCycle(obj,
       outboxDf(Seq((1L, 1L, "I", 1.0, """{"k":1}"""))), "20240115000000")
     assert(v == 1L)
     assert(store.getWatermark("prod", "orders").contains(1L)) // advanced anyway
     assert(store.deadLetters.count() == 1)
+    // The export's failure count gates the append: one dead-letter commit
+    // plus the watermark commit.
+    assert(store.commitCount - beforeFailing == 2)
 
     // T4: the same failure again is idempotent (D1 dedup).
     val relayAgain = new ChangeRelay(spark, store,
@@ -122,6 +126,17 @@ class RelaySpec extends SparkSpec {
     store.resetWatermark("prod", "orders")
     store.setWatermark("prod", "orders", 0L)
     relayAgain.runCycle(obj, outboxDf(Seq((1L, 1L, "I", 1.0, """{"k":1}"""))), "20240115000000")
+    assert(store.deadLetters.count() == 1)
+
+    // A clean cycle (the sink accepts the payload) appends no dead letter:
+    // its only commit is the watermark advance.
+    val clean = new ChangeRelay(spark, store, cfg(Seq(failingHttp)), None,
+      horizonOf = _ => 1000L)
+    val beforeClean = store.commitCount
+    val (n2, v2) = clean.runCycle(obj, outboxDf(Seq(
+      (1L, 1L, "I", 1.0, """{"k":1}"""), (2L, 2L, "U", 2.0, """{"k":2}"""))), "20240115000100")
+    assert(n2 == 1 && v2 == 2L)
+    assert(store.commitCount - beforeClean == 1, "a clean cycle commits only its watermark")
     assert(store.deadLetters.count() == 1)
 
     // T5/replay: endpoint recovers → row deleted from DLQ.
@@ -232,6 +247,96 @@ class RelaySpec extends SparkSpec {
     store.setWatermark("prod", "orders", 0L)
     relay.runCycle(obj, outboxDf(Seq((1L, 1L, "I", 1.0, """{"k":1}"""))), "20240115000000")
     assert(store.deadLetters.count() == 1) // both endpoint failures collapse (D1)
+
+    // Several envelopes in one cycle (one record each): four failure rows,
+    // one dead letter per payload, one append.
+    val perRow = new ChangeRelay(spark, store,
+      cfg(eps).copy(maxPayloadSizeBytes = 5L, maxRecordsPerBatch = 1), None,
+      horizonOf = _ => 1000L)
+    val before = store.commitCount
+    perRow.runCycle(obj, outboxDf(Seq(
+      (2L, 2L, "I", 2.0, """{"k":2}"""), (3L, 3L, "U", 3.0, """{"k":3}"""))), "20240115000100")
+    assert(store.commitCount - before == 2, "one dead-letter append + one watermark commit")
+    val letters = store.deadLetters.select("data_hash").as[String].collect()
+    assert(letters.length == 3 && letters.distinct.length == 3)
+  }
+
+  test("default horizon: an object whose max xact_id is Long.MaxValue still cycles") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    // No horizonOf: the relay's default. A max(xact_id) + 1 probe overflows
+    // here (ANSI ARITHMETIC_OVERFLOW) and failed this object on every poll.
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    store.setWatermark("prod", "orders", 0L)
+    val changes = outboxDf(Seq(
+      (1L, 1L, "I", 1.0, "{}"), (2L, 2L, "U", 2.0, "{}"), (3L, Long.MaxValue, "U", 3.0, "{}")))
+    // The gate is strict: an xact_id of Long.MaxValue reads as never committed.
+    assert(relay.runCycle(obj, changes, "20240115000000") == ((2L, 2L)))
+    assert(store.getWatermark("prod", "orders").contains(2L))
+    // OutboxSource shares the definition.
+    val src = new graft.sources.OutboxSource(() => changes)
+    assert(src.fetch(spark, 0L, graft.sources.SyncMode.Sync).count() == 2)
+    assert(src.currentVersion(spark) == 2L)
+  }
+
+  test("job diet: a steady single-envelope cycle runs no probe job and commits once") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq(TrackingObject("a", "db0", "t", "sp"), TrackingObject("b", "db0", "t", "sp"))
+    val exportTpl = dir.resolve("exports").toString + "/{object}/c-{timestamp}-{batch}.json"
+    // Default horizon; rows well under maxRecordsPerBatch; no endpoint fails.
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Nil), Some(exportTpl))
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    val feeds = objs.zipWithIndex.map { case (o, i) =>
+      o -> outboxDf(Seq((10L * i + 1, 1L, "I", 1.0, "{}"), (10L * i + 2, 2L, "U", 2.0, "{}")))
+    }
+
+    // Call sites of this test's jobs: every stage's, plus the SQL
+    // execution's (jobs adaptive execution submits from its own threads
+    // carry no caller frames in their stages).
+    val group = s"relay-job-diet-${System.nanoTime()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val execIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execSites.put(x.executionId.toString, x.details)
+          case _ =>
+        }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id")) {
+          j.stageInfos.foreach(si => sites.add(si.details))
+          Option(j.properties.getProperty("spark.sql.execution.id")).foreach(execIds.add)
+        }
+    }
+    // The listener bus is async: wait until the recorded count stops moving.
+    def settle(): Unit = {
+      var last = -1; var cur = sites.size; var spins = 0
+      while (cur != last && spins < 40) {
+        last = cur; Thread.sleep(50); cur = sites.size; spins += 1
+      }
+    }
+    val base = store.commitCount
+    spark.sparkContext.setJobGroup(group, "relay job diet")
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = relay.runCycles(feeds, "20240115000000")
+      settle()
+      r
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.clearJobGroup()
+    }
+    assert(res == Map("a" -> ((2L, 2L)), "b" -> ((2L, 12L))))
+    assert(store.commitCount - base == 1, "one watermark commit, no dead-letter append")
+    import scala.jdk.CollectionConverters._
+    val all = sites.asScala.toSeq ++ execIds.asScala.toSeq.flatMap(id => Option(execSites.get(id)))
+    assert(all.exists(_.contains("localCheckpoint")), "the export job must be observed")
+    for (probe <- Seq("defaultHorizon", "numberBatchesRange", "Dataset.isEmpty"))
+      assert(!all.exists(_.contains(probe)), s"a job ran from $probe")
   }
 
   test("a 10k-envelope cycle fans out on executors, never materializing payloads on the driver") {
