@@ -234,30 +234,12 @@ object ScaleSmoke {
       // shape, count() lets Catalyst eliminate the provably-unique left
       // join and with it the entire shingle aggregation subtree (measured:
       // 0.47 s "at 1M docs" — the r4 count()-pruning trap in join form).
-      def twoPath(): Unit = t("source rollup (join-free)")({
+      // The abandoned plain 1-join reference is recorded in BENCHNOTES
+      // "Round-7: 1M-doc row for the SHIPPED sourceDupRollup".
+      t("source rollup (join-free)")({
         DedupOps.sourceDupRollup(srcDocs, "doc_id", "text", "src",
           hotOccThreshold = 5000L)
           .agg(sum(col("n_dup_occ")), sum(col("dup_ppm"))).collect(); 20L })
-      // Same-run reference: the abandoned PLAIN single-join form (the
-      // shape AQE verifiably cannot skew-split — build side is an
-      // aggregate). The round-6 verdict asked for the 1M-doc row: run
-      // both stages in ONE invocation (SCALE_ONLY="source rollup",
-      // SCALE_DOC_COPIES=200) so the comparison is same-run;
-      // SCALE_ROLLUP_ORDER=plain_first swaps the order so an A/B pair of
-      // runs covers both orders (cache/load order bias).
-      def plain(): Unit = t("source rollup (plain 1-join)") {
-        val occ = DedupOps.shingleHashRows(srcDocs, "doc_id", "text").localCheckpoint()
-        val perShingle = occ.groupBy(col("_h")).agg(countDistinct(col("doc_id")).as("_nd"))
-        occ.join(srcDocs.select(col("doc_id"), col("src")), Seq("doc_id"))
-          .join(perShingle, Seq("_h"))
-          .groupBy(col("src"))
-          .agg(count(lit(1)).as("n_shingle_occ"),
-            sum(when(col("_nd") > 1, 1L).otherwise(0L)).as("n_dup_occ"))
-          .agg(sum(col("n_dup_occ")), sum(col("n_shingle_occ"))).collect()
-        20L
-      }
-      if (sys.env.get("SCALE_ROLLUP_ORDER").contains("plain_first")) { plain(); twoPath() }
-      else { twoPath(); plain() }
     }
     // Event-sequence analytics growth (r9): synthetic deterministic events
     // at 10 × docs, users scaled so PER-USER event counts stay ~50 at any
@@ -680,59 +662,26 @@ object ScaleSmoke {
         Similarity.semanticDedup(emb, 0.2, numCells = cents23)
           .filter(col("dropped")).count())
     }
-    // Two-level coarse-quantizer A/B (r8): assignment comparisons per
-    // vector drop from C (flat argmax over every cell) to S + C/S ≈ 2√C
-    // (route through √C super-cells, refine within one). With the IVF rule
-    // C = √N this is the N^1.5 → N^1.25 build-cost law the knnLabelAudit
-    // scaladoc states. Cells are identical in both shapes; the filter on
-    // cid forces the argmax (a bare count would let Catalyst prune the
-    // max_by and with it the dot products being measured). Both orders via
-    // SCALE_IVF_ORDER=one_first (co-tenant rule).
+    // Two-level coarse-quantizer assignment (r8): S + C/S ≈ 2√C
+    // comparisons per vector (route through √C super-cells, refine within
+    // one). With the IVF rule C = √N this is the N^1.25 build-cost law the
+    // knnLabelAudit scaladoc states; the flat 1-level A/B is recorded in
+    // BENCHNOTES "Round-8: two-level IVF assignment A/B". The filter on cid
+    // forces the argmax (a bare count would let Catalyst prune the max_by
+    // and with it the dot products being measured).
     locally {
-      import spark.implicits._
       val cc = math.max(32, math.sqrt(m.toDouble).toInt)
       val cells = Similarity.firstK(emb, cc)
-      def twoLevel(): Unit = t(s"ivf assign 2-level ($m, $cc cells)")(
+      t(s"ivf assign 2-level ($m, $cc cells)")(
         Similarity.ivfTwoLevelAssign(emb, cells)
           .filter(col("cid") >= 0).count())
-      def oneLevel(): Unit = t(s"ivf assign 1-level ($m, $cc cells)") {
-        val cellDF = broadcast(cells.toDF("cid", "cv"))
-        emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("v"))
-          .crossJoin(cellDF)
-          .withColumn("_s", Similarity.qdot(col("v"), col("cv")))
-          .groupBy(col("vec_id"))
-          .agg(max_by(col("cid"), struct(col("_s"), -col("cid"))).as("cid"))
-          .filter(col("cid") >= 0).count()
-      }
-      if (sys.env.get("SCALE_IVF_ORDER").contains("one_first")) { oneLevel(); twoLevel() }
-      else { twoLevel(); oneLevel() }
     }
-    // Same-run A/B that DECIDED the round-8 ANN top-k shape: the bounded
-    // topk_pairs aggregate vs the former rank window. With 16 queries over
-    // the full corpus, the window shuffles EVERY scored candidate of a query
-    // into one task and sorts it there; the aggregate keeps 10 pairs per
-    // (partition, query) map-side and ships only those. Both orders via
-    // SCALE_TOPK_ORDER=window_first (co-tenant rule: never publish a
-    // single-order pair).
-    locally {
-      val q = emb.filter(col("vec_id") < 16)
-      def aggShape(): Unit = t(s"brute topk agg ($m corpus)")(
-        Similarity.bruteForceTopK(emb, q, 10).count())
-      def windowShape(): Unit = t(s"brute topk window ($m corpus)") {
-        import org.apache.spark.sql.expressions.Window
-        val qq = broadcast(q.select(col("vec_id").as("query_id"),
-          Similarity.quantize(col("embedding")).as("qv")))
-        val c = emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("cv"))
-        val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
-        qq.crossJoin(c).filter(col("query_id") =!= col("vec_id"))
-          .withColumn("score", Similarity.qdot(col("qv"), col("cv")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
-          .count()
-      }
-      if (sys.env.get("SCALE_TOPK_ORDER").contains("window_first")) { windowShape(); aggShape() }
-      else { aggShape(); windowShape() }
-    }
+    // Bounded topk_pairs aggregate: keeps 10 pairs per (partition, query)
+    // map-side and ships only those; the rank-window shape it replaced is
+    // recorded in BENCHNOTES "Round-8: ANN top-k rank-window → bounded
+    // topk_pairs aggregate".
+    t(s"brute topk agg ($m corpus)")(
+      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 16), 10).count())
     spark.stop()
   }
 }

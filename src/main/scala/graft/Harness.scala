@@ -13,7 +13,7 @@ object Harness {
     * narrow pipelines parallelize like real file splits on a cluster),
     * UTC, Graft extensions registered. */
   def session(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", "4m")
@@ -22,20 +22,15 @@ object Harness {
       // so openCost is the floor on split granularity for MB-scale single
       // files — at the sf1.0 decade the 6 MB documents corpus split into 6
       // tasks and the map-heavy BPE queries ran 2.4-5× slower than at 24
-      // tasks (three-leg same-JVM FloorProfile, the 4m return leg slowest —
-      // not warmth). Local file opens cost ~nothing, unlike the cloud-store
-      // assumption behind Spark's 4 MB default; real corpora are many files
-      // and never feel this knob.
+      // tasks (three-leg same-JVM A/B, the 4m return leg slowest — not
+      // warmth; BENCHNOTES "Comment-only A/Bs"). Local file opens cost
+      // ~nothing, unlike the cloud-store assumption behind Spark's 4 MB
+      // default; real corpora are many files and never feel this knob.
       .config("spark.sql.files.openCostInBytes", "256k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
-    // Experiment hook: SPARK_GRAFT_CONF="k=v;k=v" overlays session confs so
-    // perf A/Bs (AQE on/off, codegen modes…) run the SAME binary — config
-    // deltas measured this way are attributable to the config alone.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim).filter(_.contains("="))
-      .foreach { kv => val i = kv.indexOf('='); b.config(kv.take(i), kv.drop(i + 1)) })
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -782,10 +782,10 @@ object QueriesLlm {
         // full-corpus shuffle at 100 TB) and shrinks both the top-20
         // aggregation input and the join probes by the within-doc
         // repetition factor; `c` weights keep every count
-        // occurrence-exact. Locally a wash warm (GramProf both orders
-        // 0.78-1.04 vs 0.76-1.07 s) — shipped for the deleted corpus
-        // exchange (r13 rule d: ship the scale-correct shape, record the
-        // local wash).
+        // occurrence-exact. Locally a wash warm (both orders 0.78-1.04 vs
+        // 0.76-1.07 s; BENCHNOTES "Comment-only A/Bs") — shipped for the
+        // deleted corpus exchange (r13 rule d: ship the scale-correct
+        // shape, record the local wash).
         def bc = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(TextOps.gramCounts(TextOps.tokens(col("text")), 2)).as("_g"))
@@ -3249,10 +3249,11 @@ object QueriesLlm {
         // corpus-scale (doc, tok) groupBy + its checkpoint job are gone —
         // tf is a map-only explode, dfreq aggregates the per-doc-distinct
         // rows (tf rows are distinct per (doc, tok) by construction, so df
-        // is a plain count). GramProf both orders at sf1.0: 0.70-0.83 s vs
-        // 1.02-1.41 s. Rescan over checkpoint for the shared tf subtree
-        // (r12 rule d / r18 rule h: the recompute is one tokens_norm +
-        // kernel pass over one parquet table).
+        // is a plain count). Both orders at sf1.0: 0.70-0.83 s vs
+        // 1.02-1.41 s (BENCHNOTES "Comment-only A/Bs"). Rescan over
+        // checkpoint for the shared tf subtree (r12 rule d / r18 rule h:
+        // the recompute is one tokens_norm + kernel pass over one parquet
+        // table).
         def tf = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(TextOps.gramCounts(TextOps.tokens(col("text")), 1)).as("_g"))
@@ -3620,10 +3621,10 @@ object QueriesLlm {
         // once and feed the grid through the WEIGHTED update (+cnt ≡ cnt
         // unit updates, bit-identical grid). The former shape
         // localCheckpointed occurrence-scale (tok, _h) rows and paid one
-        // sha256 PER OCCURRENCE (FloorProfile: 1.0-1.2 s of build-time
-        // actions at sf1.0); this one's checkpoint and sha pass are both
-        // vocab-scale and the occurrence rows shuffle once, map-side
-        // combined.
+        // sha256 PER OCCURRENCE (1.0-1.2 s of build-time actions at sf1.0;
+        // BENCHNOTES round 18, "on the decade floors"); this one's
+        // checkpoint and sha pass are both vocab-scale and the occurrence
+        // rows shuffle once, map-side combined.
         val tokCounts = TextOps.withNormToks(Tables.documents(s, d), "text")
           .select(explode(col("_toks")).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -4951,7 +4952,7 @@ object QueriesLlm {
     val coOpCte =
       """op AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem)""".stripMargin
-    // mega-basket guard mirrors GraphOps.supportedPairs maxBasket=1000:
+    // mega-basket guard mirrors GraphOps.coOccurrenceEdges maxBasket=1000:
     // oversized baskets never pair (no-op on this data — TPC-H orders
     // hold <= 7 parts — but the SEMANTICS must match the engine's)
     val coEdgesWCte =

@@ -19,17 +19,18 @@ object GzipCodec {
   // (Deflater/Inflater) per row; the native memory is only released by each
   // object's Cleaner at GC time, so a corpus-scale pass piles up tens of
   // thousands of un-ended zlib streams and the query's cost GROWS with JVM
-  // age (FloorProfile reps at sf1.0: exec 1.45 -> 11.9 -> 6.8 s on
-  // identical plans; the full-run artifact read 8.0 s vs 0.5-2.5 s
-  // isolated). Task/driver threads are long-lived, so one ThreadLocal
-  // Deflater/Inflater with reset() per call removes the native churn
-  // entirely. Output stays BYTE-IDENTICAL to GZIPOutputStream: same fixed
-  // 10-byte header (no MTIME, XFL=0, OS=0xff — the JDK's defaults, which
-  // the reference's Gzip.cs relies on for determinism), same
-  // Deflater(DEFAULT_COMPRESSION, nowrap=true) deflate stream (the byte
-  // sequence depends only on input + deflater params, not on how the
-  // caller chunks the output reads), same CRC32+ISIZE little-endian
-  // trailer. GzipSpec pins codec == fresh JDK stream bytes.
+  // age (same-JVM reps at sf1.0: exec 1.45 -> 11.9 -> 6.8 s on identical
+  // plans; the full-run artifact read 8.0 s vs 0.5-2.5 s isolated;
+  // BENCHNOTES "Comment-only A/Bs"). Task/driver threads are long-lived,
+  // so one ThreadLocal Deflater/Inflater with reset() per call removes
+  // the native churn entirely. Output stays BYTE-IDENTICAL to
+  // GZIPOutputStream: same fixed 10-byte header (no MTIME, XFL=0,
+  // OS=0xff — the JDK's defaults, which the reference's Gzip.cs relies on
+  // for determinism), same Deflater(DEFAULT_COMPRESSION, nowrap=true)
+  // deflate stream (the byte sequence depends only on input + deflater
+  // params, not on how the caller chunks the output reads), same
+  // CRC32+ISIZE little-endian trailer. GzipSpec pins codec == fresh JDK
+  // stream bytes.
   private val deflaterTL = ThreadLocal.withInitial[java.util.zip.Deflater](
     () => new java.util.zip.Deflater(
       java.util.zip.Deflater.DEFAULT_COMPRESSION, true))

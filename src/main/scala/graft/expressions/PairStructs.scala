@@ -13,11 +13,13 @@ import org.apache.spark.sql.types._
   * Why a native expression: the built-in formulation is a nested
   * `transform(slice(...))` HOF chain, and HOF lambdas run INTERPRETED —
   * ~C(n,2) per-element lambda invocations per row, each building a struct
-  * through the interpreter (round-9 rule a; measured in GraphProf at
-  * sf0.1: the HOF explode adds ~0.5 s warm over the group-by alone, the
-  * native loop ~0.1 s, same run). This walks the array once per row in
-  * plain JVM code and `doGenCode` emits a direct static call so the
-  * surrounding projection stays in one whole-stage-codegen span.
+  * through the interpreter (round-9 rule a; measured same-JVM at sf0.1:
+  * the HOF explode adds ~0.5 s warm over the group-by alone, the native
+  * loop ~0.1 s, same run; BENCHNOTES "Round-10 session-5: native
+  * pair_structs replaces the graph family's HOF pair explode"). This walks
+  * the array once per row in plain JVM code and `doGenCode` emits a direct
+  * static call so the surrounding projection stays in one
+  * whole-stage-codegen span.
   *
   * The caller sorts the array (canonical `pa < pb` needs a sorted input —
   * this expression pairs POSITIONALLY and does not sort or dedup). */

@@ -129,17 +129,18 @@ case class QDist2(left: Expression, right: Expression) extends QVecBinary {
   * swap (lambda-bearing projects resist collapse; ann_brute_topk
   * re-evaluates the native form once per query pairing, 5× per corpus
   * row, measured by eval counters). A BigDecimal-per-element kernel
-  * (~390 ns/element, QMicro) LOST 2-4× to the HOF form through that
+  * (~390 ns/element, microbench) LOST 2-4× to the HOF form through that
   * multiplier in same-window A/Bs; the floor-shortcut kernel
   * (~20 ns/element) wins 2-4× on the same queries in the same windows —
   * the r9 rule (a) native-kernel doctrine holds only when the kernel's
   * per-eval cost times the collapse multiplier stays below the
-  * interpreted form's single evaluation. */
+  * interpreted form's single evaluation (BENCHNOTES "Comment-only
+  * A/Bs"). */
 object QuantizeMilliCore {
   /** HALF_UP round of `d` to an integral double, bit-identical to
     * `BigDecimal.valueOf(d).setScale(0, HALF_UP)`: the floor(d+0.5)
-    * shortcut (20× cheaper — ~20 ns vs ~390 ns per element, QMicro
-    * microbench) is exact EXCEPT when the computed sum lands within one
+    * shortcut (20× cheaper — ~20 ns vs ~390 ns per element, microbench)
+    * is exact EXCEPT when the computed sum lands within one
     * ulp of an integer (the Math.round(0.49999999999999994) bug class);
     * that narrow band falls back to the reference BigDecimal op. On
     * embedding-like data the band hit rate is ~0. */

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why a native expression and not built-ins: the signals need per-doc
   * n-gram frequency tables. The two built-in formulations both lose by an
-  * order of magnitude at corpus scale (measured, RepProfile at 100k docs,
-  * same run):
+  * order of magnitude at corpus scale (measured at 100k docs, same run;
+  * BENCHNOTES "Round-9: repetition signals — three shapes measured"):
   *
   *  - explode + groupBy(doc, kind, gram): near-unique shuffle keys defeat
   *    map-side partial aggregation (round-6 rule b) — 63-72 s;

@@ -74,9 +74,9 @@ object Assemble {
       // one at CONSTRUCTION time under AQE (AdaptiveSparkPlanExec.execute
       // runs getFinalPhysicalPlan), so lazy-vs-eager only moves the final
       // stage + block write out of the build phase — a one-job-round
-      // lever, A/B'd via this conf (three-leg FloorProfile, r21).
-      .localCheckpoint(eager =
-        df.sparkSession.conf.get("spark.graft.cumsumEagerCkpt", "false").toBoolean)
+      // lever (r21; the eager/lazy A/B was never published, see BENCHNOTES
+      // "Comment-only A/Bs").
+      .localCheckpoint(eager = false)
     // ≤ groups × `buckets` rows: the subtotal window is bounded by
     // construction, never by data volume.
     val offsets = keyed.groupBy(pcols :+ col("_b"): _*)

@@ -133,8 +133,8 @@ object DedupOps {
     // repartitionById = false for consumers that never group by the doc id
     // downstream (e.g. decontaminate's test side, which goes straight to a
     // global _h distinct): the id pre-clustering buys nothing there and the
-    // corpus-text exchange is pure cost (measured at sf1.0, DecontamProf
-    // both orders: 1.4-1.7 -> 1.0-1.1 s warm).
+    // corpus-text exchange is pure cost (measured at sf1.0, both orders:
+    // 1.4-1.7 -> 1.0-1.1 s warm; BENCHNOTES "Comment-only A/Bs").
     val based = if (repartitionById) df.repartition(col(idCol)) else df
     withPerDocDistinctShingles(based, idCol, textCol)
       .select(col(idCol), explode(col("_hs")).as("_h"))
@@ -298,7 +298,7 @@ object DedupOps {
       .filter(size(col("ids")) <= maxBucket)
       // native pair build (one JVM loop per bucket) — the nested-transform
       // HOF chain runs interpreted per element (round-9 rule a; same A/B
-      // as GraphOps.supportedPairs)
+      // as GraphOps.pairsFromBaskets)
       .select(explode(expr("pair_structs(ids)")).as("p"))
       .select(col("p.pa").as("id_a"), col("p.pb").as("id_b"))
   }
@@ -481,9 +481,8 @@ object DedupOps {
     * cluster by definition and can be unioned back with label = id. */
   /** Edge count under which connected components runs as a driver
     * union-find over one bounded collect (see [[ccDriverLabels]]).
-    * Override via SPARK_GRAFT_CC_SMALL_CAP; 0 disables the fast path. */
-  val ccSmallEdgeCap: Int =
-    sys.env.get("SPARK_GRAFT_CC_SMALL_CAP").map(_.toInt).getOrElse(65536)
+    * The `smallEdgeCap` parameter overrides it; 0 disables the fast path. */
+  val ccSmallEdgeCap: Int = 65536
 
   /** Small-graph fast path shared by both CC algorithms: `take(cap+1)`
     * short-circuits after cap+1 edge rows (incremental collect-limit — at
@@ -1308,8 +1307,9 @@ object DedupOps {
       // join). Under the SHUFFLE join the _h exchange destroys the id
       // clustering before the groupBy anyway, so repartitioning the
       // corpus-TEXT rows up front is a pure full-corpus shuffle — decade
-      // wall-clock is floor-masked (A/B both orders a wash, R21Prof) but
-      // the deleted exchange is corpus-text-scale at any size.
+      // wall-clock is floor-masked (A/B both orders a wash; BENCHNOTES
+      // "Comment-only A/Bs") but the deleted exchange is
+      // corpus-text-scale at any size.
       val trainShingles = shingleHashRowsDistinctPerDoc(
         docs.filter(bucket >= testPermille), idCol, textCol,
         repartitionById = useBroadcast)

@@ -1,8 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
+import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Event-sequence analytics over the `events` table: conversion funnels,
   * cohort retention, and event-type transition counts — the product-/
@@ -53,12 +61,10 @@ object Funnel {
   /** Funnel-relevant events the greedy-fold path may process before the
     * dispatcher switches to the chained-join path. Measured crossover
     * (ScaleSmoke, both orders): fold wins 2-2.5× at 1M events, join chain
-    * wins 1.2-1.6× at 10M — the default sits between them. Override via
-    * SPARK_GRAFT_FUNNEL_FOLD_CAP; 0 forces the join chain,
-    * Long.MaxValue forces the fold (specs pin both). */
-  val foldEventsCap: Long =
-    sys.env.get("SPARK_GRAFT_FUNNEL_FOLD_CAP").map(_.toLong)
-      .getOrElse(3000000L)
+    * wins 1.2-1.6× at 10M — the default sits between them. The `foldCap`
+    * parameter overrides it: 0 forces the join chain, Long.MaxValue forces
+    * the fold (specs pin both). */
+  val foldEventsCap: Long = 3000000L
 
   /** Stats pre-filter for the fold probe: a relevant slice whose optimizer
     * size estimate exceeds this never probes — at 100 TB the chained-path
@@ -66,36 +72,82 @@ object Funnel {
     * count reads at most cap+1 rows, never the corpus. */
   private val foldBytesCap = BigInt(512L << 20)
 
-  // Keyed on the canonicalized plan's semanticHash, NOT the plan object
-  // (r20 advice): retaining LogicalPlan trees would grow driver memory
-  // with every distinct slice a long-lived session probes. A hash
-  // collision can only return a stale STRATEGY verdict (both paths are
-  // exact — same blast radius as the documented snapshot staleness).
-  // Size-bounded: past `fitsFoldCacheMax` entries the cache clears —
-  // the re-probe costs one LIMIT-bounded count, never correctness.
+  // Keyed on a SHA-256 digest of the canonicalized plan, NOT the plan
+  // object (r20 advice): retaining LogicalPlan trees would grow driver
+  // memory with every distinct slice a long-lived session probes. Nor the
+  // 32-bit semanticHash: a collision there returns another slice's
+  // verdict, and a stale `fits = true` sends a corpus-scale slice to the
+  // driver-side fold. Size-bounded: past `fitsFoldCacheMax` entries the
+  // cache clears — the re-probe costs one LIMIT-bounded count, never
+  // correctness.
   private val fitsFoldCacheMax = 1024
   private val fitsFoldCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Long), java.lang.Boolean]()
+    (SparkSession, String, Long), java.lang.Boolean]()
+
+  /** SHA-256 over a plan tree's content: every node's class and every
+    * constructor argument, recursing through nested trees (expressions,
+    * subquery plans), collections and rows (an UnsafeRow prints all its
+    * bytes, so LocalRelation data is covered). Opaque leaves — file
+    * indexes, formats, RDDs — contribute their `hashCode`, the identity
+    * the plan's own equality uses. */
+  private def planDigest(plan: LogicalPlan): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def putBytes(b: Array[Byte]): Unit = {
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
+    def put(str: String): Unit = putBytes(str.getBytes(UTF_8))
+    def feed(x: Any): Unit = x match {
+      case null => put("null")
+      case v @ (_: String | _: Number | _: java.lang.Boolean |
+                _: java.lang.Character | _: UTF8String | _: Decimal |
+                _: CalendarInterval | _: InternalRow) =>
+        put(v.getClass.getName); put(v.toString)
+      case b: Array[Byte] => putBytes(b)
+      case a: UnsafeArrayData =>
+        val buf = java.nio.ByteBuffer.allocate(a.getSizeInBytes)
+        a.writeTo(buf); putBytes(buf.array())
+      case a: ArrayData => put("array"); feed(a.array)
+      case m: MapData => put("map"); feed(m.keyArray()); feed(m.valueArray())
+      // before Product: a List is a `::` product and would recurse per cell
+      case it: Iterable[_] => put("["); it.foreach(feed); put("]")
+      case p: Product =>
+        put(p.getClass.getName); put(p.productArity.toString)
+        p.productIterator.foreach(feed)
+      case a: Array[_] => put("["); a.foreach(feed); put("]")
+      case o => put(o.getClass.getName); put(o.hashCode.toString)
+    }
+    feed(plan)
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
+
+  private def fitsFoldKey(relevant: DataFrame, cap: Long) =
+    (relevant.sparkSession,
+      planDigest(relevant.queryExecution.analyzed.canonicalized), cap)
+
+  /** Whether [[fitsFold]] holds a memoized verdict for (`relevant`, `cap`). */
+  private[ops] def fitsFoldMemoized(relevant: DataFrame, cap: Long): Boolean =
+    fitsFoldCache.containsKey(fitsFoldKey(relevant, cap))
 
   /** True when `relevant` verifiably holds ≤ `cap` rows (the
     * `Similarity.fitsSmallCorpus` / `decontaminate` dispatch pattern).
     *
-    * Memoized per (session, canonicalized-plan DIGEST, cap) — the
-    * ModelMemo keying discipline, holding no plan trees. The funnel family (steps, A/B, latency,
-    * …) probes the SAME relevant slice once per query; at the decade each
-    * probe is a ~0.7-1.2 s full pass of the slice (FloorProfile: it was
-    * most of ev_funnel/ev_ab_funnel's "build" time), and canonicalized
-    * keying dedups them to one probe per session. Same staleness boundary
-    * as ModelMemo/Tables: session-scoped snapshot-at-first-read, so an
-    * in-place rewrite of the events path within one session would reuse
-    * the old verdict (the dispatch is a pure strategy choice — both paths
-    * are exact, so a stale verdict can cost time, never correctness). */
+    * Memoized per (session, canonicalized-plan digest, cap), holding no
+    * plan trees. The funnel family (steps, A/B, latency, …) probes the
+    * SAME relevant slice once per query; at the decade each probe is a
+    * ~0.7-1.2 s full pass of the slice (it was most of ev_funnel /
+    * ev_ab_funnel's "build" time; BENCHNOTES "Comment-only A/Bs"), and
+    * canonicalized keying dedups them to one probe per session. Same
+    * staleness boundary as ModelMemo/Tables: session-scoped
+    * snapshot-at-first-read, so an in-place rewrite of the events path
+    * within one session would reuse the old verdict (the dispatch is a
+    * pure strategy choice — both paths are exact, so a stale verdict can
+    * cost time, never correctness). */
   def fitsFold(relevant: DataFrame, cap: Long = foldEventsCap): Boolean =
     cap > 0 && (cap == Long.MaxValue || {
       val it = fitsFoldCache.keySet.iterator()
       while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val key = (relevant.sparkSession,
-        relevant.queryExecution.analyzed.canonicalized.semanticHash(), cap)
+      val key = fitsFoldKey(relevant, cap)
       val cached = fitsFoldCache.get(key)
       if (cached != null) cached.booleanValue()
       else {
@@ -596,9 +648,10 @@ object Funnel {
     * preceding event exists). Exploding the bounded per-session list then
     * re-aggregating replaces the former eager localCheckpoint (a full
     * event-scale materialization job, 1.0-1.6 s of pure build time at the
-    * decade per FloorProfile) + two consumers + (user, session) join: the
-    * rollup reuses the window's user-keyed exchange (subset rule), so the
-    * whole operator is one shuffle + one bounded rollup exchange.
+    * decade; BENCHNOTES "Comment-only A/Bs") + two consumers +
+    * (user, session) join: the rollup reuses the window's user-keyed
+    * exchange (subset rule), so the whole operator is one shuffle + one
+    * bounded rollup exchange.
     * FunnelSpec pins fused ≡ the join formulation. Output is bounded by
     * |types|² + a direct row.
     *
@@ -606,10 +659,12 @@ object Funnel {
     * list holds one small string per CONVERSION in that session — bounded
     * by conversions-per-session, which is data-dependent (a bot user
     * converting for weeks under the gap funnels its credits through one
-    * buffer where the old join streamed them). Confirmed on the skewed
-    * decade (20% hot user, r19e fixture): see OPTIMIZATION_r21.md. A
-    * corpus where single sessions hold millions of conversions should
-    * pre-cap with the topPaths `_rn` trick before this rollup. */
+    * buffer where the old join streamed them). The bound was reported as
+    * confirmed on the skewed decade (20% hot user, r19e fixture), but
+    * that run's numbers were never recorded (BENCHNOTES "Comment-only
+    * A/Bs"), so treat it as unmeasured. A corpus where single sessions
+    * hold millions of conversions should pre-cap with the topPaths `_rn`
+    * trick before this rollup. */
   def attribution(events: DataFrame, tsCol: String, userCol: String,
                   typeCol: String, tieBreakCol: String, convType: String,
                   gapSecs: Long = 1800L): DataFrame = {

@@ -49,17 +49,19 @@ object GraphOps {
       .agg(sort_array(collect_set(col("item").cast("long"))).as("_items"))
 
   /** Support-counted canonical `pa < pb` pairs from a basket table — ONE
-    * definition shared by [[supportedPairs]] and the associationRules
-    * basket branch (r15 review). The pair build is the native
+    * definition shared by [[coOccurrenceEdges]], [[edgesFromBaskets]] and
+    * [[associationRules]] (r15 review). The pair build is the native
     * `pair_structs` expression — the equivalent nested
     * `transform(slice(...))` HOF chain runs INTERPRETED per element and
-    * measured ~2.5× slower for the explode stage (GraphProf sf0.1, both
-    * orders). `maxBasket` is the mega-basket skew guard (same contract as
-    * [[DedupOps.candidatePairs]]'s maxBucket): a bot basket with 100k
-    * items would cost C(n,2) pairs — quadratic memory AND support-count
-    * noise — so oversized baskets are dropped from PAIRING (item supports
-    * and n_tx still count them), with the drop count observed as
-    * `graft.graph.baskets` / `mega_baskets_dropped`. */
+    * measured ~2.5× slower for the explode stage (sf0.1, both orders;
+    * BENCHNOTES "Round-10 session-5: native pair_structs replaces the
+    * graph family's HOF pair explode"). `maxBasket` is the mega-basket
+    * skew guard (same contract as [[DedupOps.candidatePairs]]'s
+    * maxBucket): a bot basket with 100k items would cost C(n,2) pairs —
+    * quadratic memory AND support-count noise — so oversized baskets are
+    * dropped from PAIRING (item supports and n_tx still count them), with
+    * the drop count observed as `graft.graph.baskets` /
+    * `mega_baskets_dropped`. */
   private def pairsFromBaskets(baskets: DataFrame, minSupport: Int,
                                maxBasket: Int): DataFrame =
     baskets
@@ -73,18 +75,12 @@ object GraphOps {
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= minSupport)
 
-  private def supportedPairs(rows: DataFrame, minSupport: Int,
-                             maxBasket: Int): DataFrame =
-    pairsFromBaskets(basketsOf(rows), minSupport, maxBasket)
-
   /** Distinct item pairs co-occurring in a transaction, with the number of
     * transactions supporting each pair; `pa < pb` canonical. `minSupport`
     * prunes to the co-occurrence backbone (see object scaladoc). */
   def coOccurrenceEdges(fact: DataFrame, txnCol: String, itemCol: String,
                         minSupport: Int, maxBasket: Int = 1000): DataFrame =
-    supportedPairs(
-      fact.select(col(txnCol).as("_txn"), col(itemCol).as("item")), minSupport,
-      maxBasket)
+    pairsFromBaskets(basketTable(fact, txnCol, itemCol), minSupport, maxBasket)
 
   /** Basket table (txn → sorted distinct item array) — exposed so a
     * registry can persist ONE basket table across the whole co-purchase
@@ -101,9 +97,12 @@ object GraphOps {
     pairsFromBaskets(baskets, minSupport, maxBasket)
 
   /** [[associationRules]] over pre-built (typically session-persisted)
-    * basket + backbone tables — the same math as the default basket
-    * branch, minus the per-query derivation. */
+    * basket + backbone tables — the same math, minus the per-query
+    * derivation. */
   def associationRulesOnBaskets(baskets: DataFrame, edges: DataFrame): DataFrame = {
+    // per-item basket count == countDistinct(txn): collect_set deduped.
+    // Item-alphabet-bounded aggregate over the basket table; mega baskets
+    // still count here and in n_tx (the guard is pairing-only).
     val n = baskets.select(explode(col("_items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
       .localCheckpoint() // joined on both rule sides
@@ -118,65 +117,27 @@ object GraphOps {
     * the intermediate stays ≤ 10⁶ · n_tx; safe through ~10¹² baskets,
     * past which drop to 10³-scale lift units).
     *
-    * Scale shape: one transaction-keyed aggregation for the pair explode
-    * (row-local, domain-capped baskets — see [[coOccurrenceEdges]]), one
-    * item-keyed count, then joins that run on the support-pruned backbone
-    * and the item table, never the fact table. The bounded backbone and
-    * item tables each feed two subtrees → `localCheckpoint` (round-4
-    * rule d). The FACT projection is deliberately NOT deduped-and-
-    * checkpointed (r12 A/B, both orders: a wash at sf0.1 warm — 1.8-2.4 s
-    * either way): `collect_set` already dedups within-basket, so the
-    * pairs branch needs no distinct at all, and the item/total branches
-    * use `countDistinct` — each of the three branches then column-prunes
-    * its OWN scan (the n_tx branch reads one column and elides the
-    * distinct entirely), where the old shape materialized the full
-    * (txn, item) projection as deserialized rows. `checkpointFacts =
-    * true` reproduces the old shape for the GraphProf A/B. */
+    * Scale shape (round 15): ONE corpus-scale shuffle. The per-txn
+    * distinct item sets the pair explode needs anyway ARE the dedup the
+    * item counts need (`collect_set` makes per-item basket counts equal
+    * countDistinct(txn)) and the row set n_tx counts — so the txn-scale
+    * basket table is materialized once and all three branches derive from
+    * it. Baskets are txn-scale, each array domain-capped — orders of
+    * magnitude below occurrence scale — and the checkpoint sits ABOVE the
+    * shuffle, so consumers skip the corpus entirely. The bounded backbone
+    * and item tables each feed two subtrees → `localCheckpoint` (round-4
+    * rule d). Same-JVM A/B both orders (sf0.1 warm): baskets 1.53-2.00 s
+    * vs a per-branch corpus rescan 2.27-2.59 s vs a checkpointed
+    * occurrence-scale (txn, item) projection 2.34-3.35 s; identical
+    * 7146-row output (BENCHNOTES "Round-12: graph_assoc_rules
+    * fact-checkpoint A/B" holds the rescan-vs-fact-checkpoint leg). */
   def associationRules(fact: DataFrame, txnCol: String, itemCol: String,
-                       minSupport: Int, maxBasket: Int = 1000,
-                       checkpointFacts: Boolean = false,
-                       basketCheckpoint: Boolean = true): DataFrame = {
-    val base = fact.select(col(txnCol).as("_txn"), col(itemCol).as("item"))
-    val op = if (checkpointFacts) base.distinct().localCheckpoint() else base
-    // Default shape (round 15): ONE corpus-scale shuffle. The per-txn
-    // distinct item sets the pair explode needs anyway ARE the dedup the
-    // item counts need (`collect_set` makes per-item basket counts equal
-    // countDistinct(txn)) and the row set n_tx counts — so materialize the
-    // txn-scale basket table once and derive all three branches from it,
-    // where the previous shape re-scanned and re-aggregated the corpus
-    // per branch (pair agg + item countDistinct + global countDistinct =
-    // 3 corpus passes). Baskets are txn-scale, each array domain-capped —
-    // orders of magnitude below occurrence scale, so this is NOT the
-    // round-12 rule (d) wash case (that measured checkpointing the
-    // occurrence-scale (txn, item) projection; here the checkpoint sits
-    // ABOVE the shuffle and consumers skip the corpus entirely).
-    // Same-JVM A/B both orders (GraphProf, sf0.1 warm): baskets
-    // 1.53-2.00 s vs rescan 2.27-2.59 s vs occurrence-ckpt 2.34-3.35 s;
-    // identical 7146-row output. `basketCheckpoint = false` keeps the
-    // rescan shape one measurement away.
-    val (edgesCk, itemN, total) = if (checkpointFacts || !basketCheckpoint) {
-      (supportedPairs(op, minSupport, maxBasket)
-        .localCheckpoint(), // both directions of the union read it
-        (if (checkpointFacts)
-          op.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-        else
-          base.groupBy(col("item")).agg(countDistinct(col("_txn")).as("n_item")))
-          .localCheckpoint(), // joined on both rule sides
-        op.agg(countDistinct(col("_txn")).as("n_tx")))
-    } else {
-      val baskets = basketsOf(base)
-        .localCheckpoint() // feeds pairs, item counts, and n_tx
-      val e = pairsFromBaskets(baskets, minSupport, maxBasket)
-        .localCheckpoint() // both directions of the union read it
-      // per-item basket count == countDistinct(txn): collect_set deduped.
-      // Item-alphabet-bounded aggregate over the checkpointed leaf; mega
-      // baskets still count here and in n_tx (the guard is pairing-only).
-      val n = baskets.select(explode(col("_items")).as("item"))
-        .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-        .localCheckpoint() // joined on both rule sides
-      (e, n, baskets.agg(count(lit(1)).as("n_tx")))
-    }
-    rulesTail(edgesCk, itemN, total)
+                       minSupport: Int, maxBasket: Int = 1000): DataFrame = {
+    val baskets = basketTable(fact, txnCol, itemCol)
+      .localCheckpoint() // feeds pairs, item counts, and n_tx
+    associationRulesOnBaskets(baskets,
+      edgesFromBaskets(baskets, minSupport, maxBasket)
+        .localCheckpoint()) // both directions of the union read it
   }
 
   private def rulesTail(edgesCk: DataFrame, itemN: DataFrame,
@@ -230,10 +191,9 @@ object GraphOps {
 
   /** Distinct-edge count under which [[pageRank]] iterates on the driver
     * (one bounded collect of the edge AGGREGATE, never the edge table);
-    * above it the distributed power iteration runs. Override via
-    * SPARK_GRAFT_PR_SMALL_CAP; 0 disables the driver path. */
-  val prSmallEdgeCap: Int =
-    sys.env.get("SPARK_GRAFT_PR_SMALL_CAP").map(_.toInt).getOrElse(65536)
+    * above it the distributed power iteration runs. The `edgeCap`
+    * parameter overrides it; 0 disables the driver path. */
+  val prSmallEdgeCap: Int = 65536
 
   /** PageRank over an arbitrary (src, dst) edge table — e.g. the
     * registrable-domain link graph, the crawl-curation authority signal

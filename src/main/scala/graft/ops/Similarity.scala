@@ -60,7 +60,8 @@ object Similarity {
   // ---------------------------------------------------------------------
 
   /** Rows a corpus may have and still take the fused broadcast path.
-    * Override via SPARK_GRAFT_ANN_SMALL_CAP; 0 disables the fast path.
+    * Each operator's `smallCap` parameter overrides it; 0 disables the
+    * fast path.
     *
     * 32768 (r17, was 8192): the cap bounds DRIVER state — 32k rows ×
     * 64 dims × 8 B = 16 MB collected, and every fused path's driver
@@ -71,8 +72,7 @@ object Similarity {
     * fused (same-window A/B, both orders; recall_at_k ~0.3 s better,
     * everything else a wash). The distributed twins remain spec-pinned
     * bit-identical and ScaleSmoke forces them via smallCap = 0. */
-  val smallCorpusCap: Long =
-    sys.env.get("SPARK_GRAFT_ANN_SMALL_CAP").map(_.toLong).getOrElse(32768L)
+  val smallCorpusCap: Long = 32768L
 
   /** Minimum centroid count for the two-level coarse quantizer to engage
     * (below it the √C super-level saves nothing over the flat argmax).
@@ -497,9 +497,10 @@ object Similarity {
     * apart (each extra band only adds |corpus| rows to the bucket join,
     * never all-pairs work).
     *
-    * MEGA-CLUSTER ADJUDICATION (r20, measured — [[graft.MbSkewProf]] on
-    * the skewed decade, 20k vectors with a ~2.3k hot clique): a
-    * recall-preserving hot-bucket sub-split does NOT exist. Re-keying
+    * MEGA-CLUSTER ADJUDICATION (r20, measured on the skewed decade, 20k
+    * vectors with a ~2.3k hot clique; BENCHNOTES "Round 20: mega-cluster
+    * sub-split REFUTED by measurement"): a recall-preserving hot-bucket
+    * sub-split does NOT exist. Re-keying
     * buckets > 1000 with +2/+4 extra hyperplanes cut candidate slots only
     * 17.59M → 16.77M/16.58M (−4.7%/−5.7%) while LOSING 67k/85k of the
     * 2.93M true output pairs (2.3%/2.9% recall) and running SLOWER (the
@@ -878,12 +879,10 @@ object Similarity {
   /** Default cell-size cap for [[semanticDedup]]'s skew guard: with the
     * √N cell rule a balanced cell is ~√N wide, so 4096 only ever engages
     * on genuinely degenerate clusters (it bounds the per-cell pair work
-    * at |cell|·4096). Override via SPARK_GRAFT_SEMDEDUP_MAX_CELL;
+    * at |cell|·4096). The `maxCellSize` parameter overrides it;
     * Long.MaxValue disables the guard (spec-pinned identical on balanced
     * data). */
-  val semDedupMaxCell: Long =
-    sys.env.get("SPARK_GRAFT_SEMDEDUP_MAX_CELL").map(_.toLong)
-      .getOrElse(4096L)
+  val semDedupMaxCell: Long = 4096L
 
   private val semDedupObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -354,8 +354,9 @@ object TextOps {
     * ONE native-expression pass over the token array
     * ([[graft.expressions.RepetitionStats]]) — the HOF formulation
     * (transform + array_sort + aggregate) measured SLOWER than even the
-    * shuffle shape at 100k docs (100 s vs 63-72 s, RepProfile same-run)
-    * because gram construction is ~120M interpreted lambda evaluations.
+    * shuffle shape at 100k docs (100 s vs 63-72 s, same run; BENCHNOTES
+    * "Round-9: repetition signals — three shapes measured") because gram
+    * construction is ~120M interpreted lambda evaluations.
     * Embarrassingly parallel at 100 TB: no shuffle, no skew, no spill. */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.graftglue.ColumnGlue
@@ -446,9 +447,10 @@ object TextOps {
     * matches in a text lacking it, so the regex scan can be skipped from
     * one instr() probe. This matters most for the email class — Java
     * regex backtracks the `[a-zA-Z0-9._%+-]+` local-part class at every
-    * start position of ordinary prose (PiiProf at sf1.0: 1.9-2.1 s for
-    * the email count alone vs 0.26-0.54 s per other class), which is the
-    * bulk of the 6× gap to the oracle's RE2 (automaton, no backtracking).
+    * start position of ordinary prose (r17 at sf1.0: 1.9-2.1 s for the
+    * email count alone vs 0.26-0.54 s per other class; BENCHNOTES
+    * "Comment-only A/Bs"), which is the bulk of the 6× gap to the
+    * oracle's RE2 (automaton, no backtracking).
     * Semantics are bit-identical, so the oracle SQL is unchanged; IBAN
     * and the long-digit fallback have no single required literal and stay
     * unguarded (they are the cheap patterns). */
@@ -570,7 +572,8 @@ object TextOps {
     * compact (id, token-array) projection: 33-39 s fresh but 122-124 s on
     * re-use in the same JVM, BOTH orders (storage-memory residue of a
     * corpus-scale checkpoint), vs 40-52 s stable for this two-pass shape
-    * (RefFreqProfile ABBA) — and at 100 TB a tokenized-corpus
+    * (ABBA, both orders; BENCHNOTES "Round-9: funnel fold vs chained
+    * step-joins", its ref-freq paragraph) — and at 100 TB a tokenized-corpus
     * materialization is a non-starter while a 0.3× re-scan is routine.
     * Strategy tiers (r19, mirrors decontaminate): (1) vocab ≤
     * `maxDriverVocab` rows → the sorted (tok, df) arrays ride as two
@@ -659,9 +662,10 @@ object TextOps {
     } else {
       // Join tiers: scoring pass explodes per-doc-DISTINCT (tok, c) pairs
       // from the gram_counts kernel (occurrence-exact via the c weights;
-      // GramProf both orders at sf1.0: 0.50-0.76 s vs 1.03-1.25 s for the
-      // occurrence-explode shape), vocab broadcast when the LIMIT probe
-      // says it fits, shuffle join otherwise.
+      // both orders at sf1.0: 0.50-0.76 s vs 1.03-1.25 s for the
+      // occurrence-explode shape; BENCHNOTES "Comment-only A/Bs"), vocab
+      // broadcast when the LIMIT probe says it fits, shuffle join
+      // otherwise.
       val occ = docs
         .select(col(idCol), explode(gramCounts(tokens(col(textCol)), 1)).as("_g"))
         .select(col(idCol), col("_g.s").as("tok"), col("_g.c").as("c"))
@@ -1126,8 +1130,7 @@ object TextOps {
     // strings never contain a space, bigrams always do — disjoint key
     // spaces). Replaces the two-pass two-aggregation shape: same-JVM
     // both-orders A/B at sf1.0 read 0.57-0.71 s vs 0.75-1.03 s warm and
-    // 1.30 vs 1.53-2.11 s cold (GramProf). The old shape's
-    // SPARK_GRAFT_TOK_CKPT toggle died with the second pass.
+    // 1.30 vs 1.53-2.11 s cold (BENCHNOTES "Comment-only A/Bs").
     val grams = docs
       .select(explode(gramCounts(tokens(col(textCol)), 3)).as("_g"))
       .groupBy(col("_g.s").as("_s")).agg(sum(col("_g.c")).as("_c"))

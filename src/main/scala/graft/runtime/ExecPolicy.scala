@@ -7,11 +7,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Small-query execution policy: run tiny scan-dominated queries without
   * adaptive re-planning and without Janino codegen.
   *
-  * Rationale (measured, FloorProfile same-JVM A/B at sf0.1): a control-table
-  * query pays ~0.5-1.0 s of per-query fixed floor, of which AQE contributes
-  * ~0.2-0.5 s (one extra job round + re-optimization per shuffle stage) and
-  * cold whole-stage codegen ~0.2-0.6 s (Janino, paid once per DISTINCT plan
-  * — a 112-query registry pays it 112 times). Neither amortizes on a
+  * Rationale (measured, same-JVM A/B at sf0.1; BENCHNOTES "Round-7: the
+  * per-query floor attack"): a control-table query pays ~0.5-1.0 s of
+  * per-query fixed floor, of which AQE contributes ~0.2-0.5 s (one extra
+  * job round + re-optimization per shuffle stage) and cold whole-stage
+  * codegen ~0.2-0.6 s (Janino, paid once per DISTINCT plan — a 112-query
+  * registry pays it 112 times). Neither amortizes on a
   * kilobyte-scale input; this is the same economics as Postgres's
   * `jit_above_cost` (JIT only above a cost threshold) and Spark's own
   * `spark.sql.codegen.fallback` escape hatch. On a 100 TB input the policy
@@ -27,8 +28,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *      Expand), no checkpointed intermediate (LogicalRDD — an iterative
   *      pipeline's tail), no typed imperative node (MapPartitions /
   *      DeserializeToObject / CoGroup — per-row JVM work like multimodal
-  *      decode), and no higher-order array function (embedding dot products
-  *      are compute-dense per input byte; interpreted eval would tax them).
+  *      decode), and at most `maxExprNodes` expression nodes (embedding
+  *      dot products are compute-dense per input byte; interpreted eval
+  *      would tax them).
   *
   * Input bytes are a proxy for OUTPUT/compute only on scan-shaped plans —
   * condition 2 is what keeps the 594 KB documents table's shingle-explosion
@@ -39,10 +41,8 @@ object ExecPolicy {
 
   /** 8 MB: comfortably above the control fixtures (events at sf0.1 is
     * 2.2 MB) and below the smallest data-path fact table the bench codegens
-    * (lineitem at sf0.1 is 10.8 MB). Override for A/Bs via
-    * SPARK_GRAFT_SMALL_INPUT_BYTES; 0 disables the policy. */
-  val smallInputBytes: Long =
-    sys.env.get("SPARK_GRAFT_SMALL_INPUT_BYTES").map(_.toLong).getOrElse(8L << 20)
+    * (lineitem at sf0.1 is 10.8 MB). */
+  val smallInputBytes: Long = 8L << 20
 
   private val smallConfs = Seq(
     "spark.sql.adaptive.enabled" -> "false",
@@ -62,9 +62,7 @@ object ExecPolicy {
     * at tens-to-hundreds of nodes. */
   private val maxExprNodes = 1500L
 
-  private val strictHof = sys.env.get("SPARK_GRAFT_POLICY_HOF").contains("strict")
-
-  def isSmall(df: DataFrame): Boolean = smallInputBytes > 0 && {
+  def isSmall(df: DataFrame): Boolean = {
     // The outer plan AND every plan nested in a subquery expression: a
     // Generate or a large scan inside a scalar/IN-subquery is invisible to
     // exists/collectLeaves on the outer tree, and qualifying such a query
@@ -74,11 +72,6 @@ object ExecPolicy {
     val disqualified = plans.exists(_.exists {
       case _: Generate | _: Expand | _: LogicalRDD => true
       case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
-      // A/B toggle (SPARK_GRAFT_POLICY_HOF=strict restores the round-7a
-      // disqualifier that kept any HOF-bearing plan off the policy).
-      case n if strictHof =>
-        n.expressions.exists(_.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.HigherOrderFunction]))
       case _ => false
     })
     // Higher-order functions do NOT disqualify: HOF lambdas are
@@ -96,74 +89,61 @@ object ExecPolicy {
         .map(_.stats.sizeInBytes).sum < smallInputBytes
   }
 
-  /** Run `action` on `df` under the small-query confs when it qualifies,
-    * restoring the session confs afterwards. The confs are read at physical
-    * planning, which for a fresh DataFrame happens inside `action` — callers
-    * must not force `executedPlan` before calling. Sequential use only (the
-    * confs are session-scoped while set); Bench and Verify run queries
-    * one at a time. */
   /** Tier-1 (r13 floor attack): AQE-off ONLY — codegen and shuffle
     * partitioning untouched — for plans with small known inputs that fail
     * just the SHAPE guards (Generate/Expand/HOF/node count). Rationale,
-    * measured with the three-leg FloorProfile discipline (AQE on → off →
-    * on again, so JVM warmth cannot fake the effect): on shuffle-bearing
-    * Generate-class queries over control-scale inputs, AQE costs
-    * 60–150 ms/query of extra job rounds (dedup_winnow 157-182 ms off vs
-    * 291-342 ms on-again; llm_freq_spectrum 266-313 vs 342-427;
-    * sk_topk_agg ~145 vs ~170), and is a wash on map-only plans. With
-    * < [[smallInputBytes]] of input there is nothing material for runtime
-    * re-planning to fix — coalescing tiny partitions and splitting skewed
-    * joins both presuppose data that a sub-8MB scan cannot produce — while
-    * codegen stays ON, so the round-7 interpreted-eval cliff (2 s → 46 s)
-    * that [[isSmall]]'s shape guards exist for cannot engage. Iterative
-    * tails (LogicalRDD) and typed imperative nodes stay on the full
-    * adaptive path: the r12 full-registry A/B showed AQE genuinely earning
-    * its cost on the graph/iterative family, and checkpoint boundaries
-    * hide the true plan size (round-10 s4 rule e needs AQE to skew-split
-    * hot keys below a checkpointed weight table). Disable for A/Bs via
-    * SPARK_GRAFT_NO_TIER1=1. */
-  /** Tier-1 reduce-task count — MEASURED A WASH, left inheriting the
-    * session's partitions: the hypothesis was that AQE-off reverts sub-8MB
-    * reduces to 32 near-empty tasks that AQE would have coalesced, so
-    * fewer fixed partitions should save task-launch overhead. Same-JVM
-    * FloorProfile BOTH orders (dedup_winnow, sk_topk_agg,
-    * llm_freq_spectrum, dedup_minhash_sig, sf0.1): the 8→32→8 order read
-    * 40-80 ms/query for 8, but the reversed 32-first order erased it
-    * completely (winnow 253-270 ms at 8 vs 245-316 at 32; minhash_sig
-    * 256-309 vs 234-250) — the "win" was JVM warmth, the round-12 rule (j)
-    * trap. Empty reduce tasks cost ~1 ms each on local; at cluster scale
-    * tier-1 never fires on data that would care. The session-conf knob
-    * (`spark.graft.tier1.parts`) stays for future same-JVM A/Bs; unset
-    * means no override. */
-  private val tier1PartsDefault: String =
-    sys.env.getOrElse("SPARK_GRAFT_TIER1_PARTS", "")
-
-  private def tier1Confs(df: DataFrame): Seq[(String, String)] = {
-    val parts = df.sparkSession.conf.get("spark.graft.tier1.parts", tier1PartsDefault)
-    Seq("spark.sql.adaptive.enabled" -> "false") ++
-      (if (parts.nonEmpty) Seq("spark.sql.shuffle.partitions" -> parts) else Nil)
-  }
-
-  private val tier1Disabled = sys.env.get("SPARK_GRAFT_NO_TIER1").contains("1")
+    * measured with the three-leg same-JVM discipline (AQE on → off → on
+    * again, so JVM warmth cannot fake the effect; BENCHNOTES "Round-13:
+    * tier-1 small-query dispatch"): on shuffle-bearing Generate-class
+    * queries over control-scale inputs, AQE costs 60–150 ms/query of extra
+    * job rounds (dedup_winnow 157-182 ms off vs 291-342 ms on-again;
+    * llm_freq_spectrum 266-313 vs 342-427; sk_topk_agg ~145 vs ~170), and
+    * is a wash on map-only plans. With < [[smallInputBytes]] of input
+    * there is nothing material for runtime re-planning to fix —
+    * coalescing tiny partitions and splitting skewed joins both presuppose
+    * data that a sub-8MB scan cannot produce — while codegen stays ON, so
+    * the round-7 interpreted-eval cliff (2 s → 46 s) that [[isSmall]]'s
+    * shape guards exist for cannot engage. Iterative tails (LogicalRDD)
+    * and typed imperative nodes stay on the full adaptive path: the r12
+    * full-registry A/B showed AQE genuinely earning its cost on the
+    * graph/iterative family, and checkpoint boundaries hide the true plan
+    * size (round-10 s4 rule e needs AQE to skew-split hot keys below a
+    * checkpointed weight table).
+    *
+    * Tier-1 inherits the session's shuffle partitions — a fixed smaller
+    * reduce-task count MEASURED A WASH: the 8→32→8 order read 40-80
+    * ms/query for 8, but the reversed 32-first order erased it completely
+    * (winnow 253-270 ms at 8 vs 245-316 at 32; minhash_sig 256-309 vs
+    * 234-250) — the "win" was JVM warmth, the round-12 rule (j) trap
+    * (BENCHNOTES "Comment-only A/Bs"). Empty reduce tasks cost ~1 ms each
+    * on local; at cluster scale tier-1 never fires on data that would
+    * care. */
+  private val tier1Confs = Seq("spark.sql.adaptive.enabled" -> "false")
 
   /** Small known input, no iterative/typed node — shape guards NOT
     * consulted (Generate/Expand/HOF allowed: with codegen on they cost the
     * same either way). */
-  def isSmallInputNonIterative(df: DataFrame): Boolean =
-    smallInputBytes > 0 && !tier1Disabled && {
-      val plans = { val p = df.queryExecution.optimizedPlan; p +: p.subqueriesAll }
-      !plans.exists(_.exists {
-        case _: LogicalRDD => true
-        case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
-        case _ => false
-      }) &&
-        plans.flatMap(_.collectLeaves()).distinctBy(_.canonicalized)
-          .map(_.stats.sizeInBytes).sum < smallInputBytes
-    }
+  def isSmallInputNonIterative(df: DataFrame): Boolean = {
+    val plans = { val p = df.queryExecution.optimizedPlan; p +: p.subqueriesAll }
+    !plans.exists(_.exists {
+      case _: LogicalRDD => true
+      case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
+      case _ => false
+    }) &&
+      plans.flatMap(_.collectLeaves()).distinctBy(_.canonicalized)
+        .map(_.stats.sizeInBytes).sum < smallInputBytes
+  }
 
+  /** Run `action` on `df` under the small-query confs when it qualifies
+    * (tier-1 confs when only the input-size test holds), restoring the
+    * session confs afterwards. The confs are read at physical planning,
+    * which for a fresh DataFrame happens inside `action` — callers must
+    * not force `executedPlan` before calling. Sequential use only (the
+    * confs are session-scoped while set); Bench and Verify run queries
+    * one at a time. */
   def run[T](df: DataFrame)(action: DataFrame => T): T =
     if (isSmall(df)) runWith(smallConfs, df)(action)
-    else if (isSmallInputNonIterative(df)) runWith(tier1Confs(df), df)(action)
+    else if (isSmallInputNonIterative(df)) runWith(tier1Confs, df)(action)
     else action(df)
 
   /** Apply the small-query confs WITHOUT the plan guards — for callers

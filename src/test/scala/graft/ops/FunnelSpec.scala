@@ -278,12 +278,31 @@ class FunnelSpec extends SparkSpec {
       assert(afterCap > afterFirst)
       // a CHANGED source plan is a memo MISS (the ModelMemoSpec
       // data-change contract, r20 verdict task 8): a slice over different
-      // data must re-probe, not reuse the old verdict
+      // data must re-probe, not reuse the old verdict. Asserted on the memo
+      // itself, so it holds whichever way the probe decides.
       val relChanged = events.filter($"event_type".isin("signup", "view"))
         .unionByName(events.limit(1))
+      assert(Funnel.fitsFoldMemoized(rel2, cap))
+      assert(!Funnel.fitsFoldMemoized(relChanged, cap),
+        "a changed source plan must miss the memo")
       Funnel.fitsFold(relChanged, cap)
-      assert(settle() > afterCap,
-        "a changed source plan must re-probe (data-change MISS)")
+      assert(Funnel.fitsFoldMemoized(relChanged, cap))
+      // same plan shape, different LocalRelation rows: the digest covers
+      // the data, so the second slice misses too
+      def oneRow(user: Long) = Seq((1L, ts(100L), user, "signup"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+      Funnel.fitsFold(oneRow(98L), cap)
+      assert(Funnel.fitsFoldMemoized(oneRow(98L), cap))
+      assert(!Funnel.fitsFoldMemoized(oneRow(99L), cap),
+        "rows that differ only in data must not share a memo entry")
+      // a file-backed slice read twice (fresh relation objects) hits: the
+      // digest follows the plan's equality, not object identity
+      val dir = java.nio.file.Files.createTempDirectory("fitsfold")
+        .resolve("events").toString
+      events.write.parquet(dir)
+      def fromFile = spark.read.parquet(dir).filter($"event_type" === "view")
+      Funnel.fitsFold(fromFile, cap)
+      assert(Funnel.fitsFoldMemoized(fromFile, cap))
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.sparkContext.clearJobGroup()
