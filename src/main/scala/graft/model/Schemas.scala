@@ -140,5 +140,4 @@ object Defaults {
   val DlqBackoffCapSeconds = 6 * 3600  // cap 6h, DeadLetterReplayService.cs:137-141
   val DlqRetentionDays = 60
   val CompressionThresholdBytes = 1024 // MessageQueueService.cs:36
-  val ExportDirCapBytes: Long = 500L * 1024 * 1024 // FilePathSizeLimit * 1 MiB, ExportService.cs:48
 }

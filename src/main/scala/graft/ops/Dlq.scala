@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.Defaults
 
 /** Dead-letter-queue dataflow: hash dedup, due filter, exponential backoff,
   * retry-state transition, monitor statistics, search and pagination.
@@ -46,8 +47,8 @@ object Dlq {
 
   /** F3 — exponential backoff in seconds: `base * 2^attempts`, capped 6 h.
     * Ref: DeadLetterReplayService.cs:137-141. */
-  def backoffSeconds(attempts: Column, baseSeconds: Int = 60,
-                     capSeconds: Int = 6 * 3600): Column =
+  def backoffSeconds(attempts: Column, baseSeconds: Int = Defaults.DlqBackoffBaseSeconds,
+                     capSeconds: Int = Defaults.DlqBackoffCapSeconds): Column =
     least(lit(capSeconds.toLong), (lit(baseSeconds.toLong) * pow(lit(2.0), attempts)).cast("long"))
 
   /** T5 — the failed-replay state transition: attempts+1, next attempt after
@@ -56,7 +57,8 @@ object Dlq {
     * `record.Attempts` as the row had it going in — "the first failure waits
     * one base delay", DeadLetterReplayService.cs:134-141).
     * Ref: DeadLetterReplayService.cs:75-141, park at :109-115. */
-  def retryState(dlq: DataFrame, now: Column, baseSeconds: Int = 60): DataFrame =
+  def retryState(dlq: DataFrame, now: Column,
+                 baseSeconds: Int = Defaults.DlqBackoffBaseSeconds): DataFrame =
     dlq
       .withColumn("backoff_seconds",
         when(col("environment_name").isNull, lit(365L * 24 * 3600))
@@ -129,7 +131,8 @@ object Dlq {
 
   /** Retention purge — drop rows older than the cutoff.
     * Ref: DeadLetterService.cs:146-161. */
-  def purgeExpired(dlq: DataFrame, now: Column, retentionDays: Int = 60): DataFrame =
+  def purgeExpired(dlq: DataFrame, now: Column,
+                   retentionDays: Int = Defaults.DlqRetentionDays): DataFrame =
     dlq.filter(retained(now, retentionDays))
 
   /** The rows [[purgeExpired]] keeps: not older than the cutoff. A null

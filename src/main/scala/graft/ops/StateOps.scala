@@ -13,24 +13,26 @@ import org.apache.spark.sql.functions._
   */
 object StateOps {
 
-  /** J6 — watermark upsert: `INSERT … ON CONFLICT (env, object) DO UPDATE`.
-    * Full-outer merge of current state with the batch of updates; update
-    * wins, untouched rows survive. Both sides are keyed alike so at scale
-    * this is one co-partitioned shuffle of the (small) state table.
-    * Ref: ChangeTrackingBackgroundService.cs:625-642. */
-  def watermarkUpsert(state: DataFrame, updates: DataFrame): DataFrame = {
-    val s = state.select(
-      col("environment_name"), col("object_name"),
-      col("last_version").as("_old_version"), col("last_updated").as("_old_updated"))
-    val u = updates.select(
-      col("environment_name"), col("object_name"),
-      col("last_version").as("_new_version"), col("last_updated").as("_new_updated"))
-    s.join(u, Seq("environment_name", "object_name"), "full_outer")
-      .select(
-        col("environment_name"), col("object_name"),
-        coalesce(col("_new_version"), col("_old_version")).as("last_version"),
-        coalesce(col("_new_updated"), col("_old_updated")).as("last_updated"))
+  /** The key of the watermark table: one row per (environment, object). */
+  val WatermarkKey: Seq[String] = Seq("environment_name", "object_name")
+
+  /** Keyed replace, the one control-table merge: `state` rows whose `keys`
+    * are not in `updates`, plus all of `updates` (no keys: an append). A
+    * small `updates` is broadcast into the anti-join — no shuffle. */
+  def upsert(state: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
+    val cols = state.columns.toSeq.map(col)
+    val kept =
+      if (keys.isEmpty) state
+      else state.join(updates.select(keys.map(col): _*), keys, "left_anti")
+    kept.select(cols: _*).unionByName(updates.select(cols: _*))
   }
+
+  /** J6 — watermark upsert: `INSERT … ON CONFLICT (env, object) DO UPDATE`.
+    * [[upsert]] on (environment, object): the update wins, untouched rows
+    * survive, new keys insert.
+    * Ref: ChangeTrackingBackgroundService.cs:625-642. */
+  def watermarkUpsert(state: DataFrame, updates: DataFrame): DataFrame =
+    upsert(state, updates, WatermarkKey)
 
   /** W4 — latest state per key from a log-structured state table. */
   def latestPerKey(log: DataFrame, keyCols: Seq[String], orderCol: String): DataFrame = {

@@ -96,6 +96,21 @@ object Amqp {
 
   // --- the publisher -----------------------------------------------------
 
+  /** A sink target `amqp://host:port/exchange` as (host, port, exchange);
+    * None when the slash before the exchange, the host or the port is
+    * missing, or the port is not a number in 1..65535. A malformed target
+    * is a config error that dead-letters, never an exception in the task. */
+  def parseTarget(target: String): Option[(String, Int, String)] =
+    target.stripPrefix("amqp://").split("/", 2) match {
+      case Array(hostPort, exchange) =>
+        hostPort.split(":", 2) match {
+          case Array(host, port) if host.nonEmpty =>
+            port.toIntOption.filter(n => n > 0 && n <= 65535).map((host, _, exchange))
+          case _ => None
+        }
+      case _ => None
+    }
+
   /** Publish one message; returns the tuned frame-max actually used (so
     * callers/specs can assert the body-split arithmetic) or a failure. */
   def publish(host: String, port: Int,

@@ -176,7 +176,7 @@ object Sinks {
     "eventhubs" -> 1L * 1024 * 1024,
     "kafka" -> 1L * 1024 * 1024)
 
-  val CompressionThreshold = 1024L
+  val CompressionThreshold: Long = graft.model.Defaults.CompressionThresholdBytes.toLong
 
   /** K3–K6 guard level: required fields, compress-then-cap. Returns the
     * publishable body or the failure that dead-letters. */

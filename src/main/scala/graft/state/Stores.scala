@@ -1,13 +1,16 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.Schemas
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.model.{Defaults, Schemas}
 import graft.ops.{Dlq, StateOps}
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-/** Parquet-backed control tables: watermarks, pauses, dead letters.
+/** Parquet-backed snapshot tables: the relay's control tables (watermarks,
+  * pauses, dead letters), the stream operators' state, and saved models.
   *
   * Mirrors the reference's SQLite state.db / sinkhole.db
   * (ChangeTrackingBackgroundService.cs:158-173, PauseService.cs:27-48,
@@ -15,6 +18,9 @@ import java.util.Comparator
   * writes a NEW versioned snapshot directory and then flips a pointer file —
   * the commit is the atomic pointer write, so a crash mid-write never
   * corrupts the current snapshot (readers always resolve the pointer).
+  *
+  * Every write is one [[commit]]: a control table changes only through
+  * [[mutate]], a stream operator's state only through [[commitBatch]].
   *
   * Control tables are tiny (one row per tracked object / pause / failure),
   * so full-snapshot rewrites are the right trade-off — the data-scale state
@@ -39,7 +45,7 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   }
 
   /** Read the current snapshot, or an empty frame with the given schema. */
-  def read(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+  def read(name: String, schema: StructType): DataFrame =
     currentDir(name) match {
       case Some(dir) => spark.read.schema(schema).parquet(dir.toString)
       case None => spark.createDataFrame(
@@ -87,6 +93,30 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     finally listing.close()
   }
 
+  /** The one shape of a control-table mutation: the current rows that
+    * `keep` admits and whose `key` does not occur in `add`, plus `add`
+    * ([[StateOps.upsert]]), committed as one plan in one snapshot. */
+  private def mutate(name: String, schema: StructType, keep: Column = lit(true),
+      add: Option[DataFrame] = None, key: Seq[String] = Nil): Unit = {
+    val kept = read(name, schema).filter(keep)
+    commit(name, add.fold(kept)(StateOps.upsert(kept, _, key)))
+  }
+
+  // ---- micro-batch progress ---------------------------------------------
+
+  /** The stream operators' exactly-once gate: the last micro-batch id
+    * [[commitBatch]] landed in `table`, or -1. A replayed batch at or below
+    * it is skipped by the caller — its output and state already landed. */
+  def committedBatch(table: String): Long =
+    read(table, new StructType().add("committed_batch", LongType))
+      .agg(coalesce(max(col("committed_batch")), lit(-1L))).head().getLong(0)
+
+  /** Commit `state` with `batchId` in the same rows: state and progress
+    * flip in ONE pointer write, so a crash never leaves a batch
+    * half-applied. Callers write their idempotent per-batch output first. */
+  def commitBatch(table: String, state: DataFrame, batchId: Long): Unit =
+    commit(table, state.withColumn("committed_batch", lit(batchId)))
+
   // ---- watermarks (LastVersions) ----------------------------------------
 
   def watermarks: DataFrame = read("watermarks", Schemas.watermarkSchema)
@@ -100,16 +130,17 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * object per cycle — O(objects²) row writes per cycle; batching makes
     * per-cycle watermark I/O one read + one write regardless of how many
     * tracked objects advanced ([[graft.streaming.ChangeRelay.runCycles]]
-    * collects the cycle's advances and lands here). One `watermarkUpsert`
-    * merge handles the whole batch — update wins per (env, object),
-    * untouched rows survive. */
+    * collects the cycle's advances and lands here). The merge is
+    * [[StateOps.watermarkUpsert]]'s: the driver-built update is broadcast
+    * into a key anti-join, so the table is never shuffled. */
   def setWatermarks(updates: Seq[(String, String, Long)]): Unit = {
     if (updates.isEmpty) return
     import spark.implicits._
     val update = updates
       .toDF("environment_name", "object_name", "last_version")
       .withColumn("last_updated", current_timestamp())
-    commit("watermarks", StateOps.watermarkUpsert(watermarks, update))
+    mutate("watermarks", Schemas.watermarkSchema, add = Some(update),
+      key = StateOps.WatermarkKey)
   }
 
   def getWatermark(env: String, obj: String): Option[Long] =
@@ -121,8 +152,8 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   /** T8 — state reset: deleting the row re-initializes the object per its
     * InitialSyncMode on the next cycle (Program.cs:401-432). */
   def resetWatermark(env: String, obj: String): Unit =
-    commit("watermarks", watermarks.filter(
-      !(col("environment_name") === env && col("object_name") === obj)))
+    mutate("watermarks", Schemas.watermarkSchema,
+      keep = !(col("environment_name") === env && col("object_name") === obj))
 
   // ---- pauses -----------------------------------------------------------
 
@@ -133,62 +164,65 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     val row = Seq((scope.toLowerCase, reason, by))
       .toDF("scope", "reason", "paused_by")
       .withColumn("paused_at", current_timestamp())
-    commit("pauses", pauses.filter(col("scope") =!= scope.toLowerCase).unionByName(row))
+    mutate("pauses", Schemas.pauseSchema, add = Some(row), key = Seq("scope"))
   }
 
   /** T7 — resume = delete the row; holds survive restarts because they live
     * in the store, not in config (PauseService.cs:10-16). */
   def resume(scope: String): Unit =
-    commit("pauses", pauses.filter(col("scope") =!= scope.toLowerCase))
+    mutate("pauses", Schemas.pauseSchema, keep = col("scope") =!= scope.toLowerCase)
 
   // ---- dead letters -----------------------------------------------------
 
   def deadLetters: DataFrame = read("dead_letters", Schemas.deadLetterSchema)
 
   /** K9/D1 — append failures with exactly-once-per-payload semantics:
-    * a (source_key, data_hash) already present is skipped (T4).
+    * a (source_key, data_hash) already present is skipped (T4), and so is
+    * every row of the batch but the first per payload.
     *
-    * Id assignment is maxId + a dense offset in (source_key, data_hash)
-    * order — computed WITHOUT a single-partition window: range-partition +
-    * in-partition sort reproduces the total order, and `zipWithIndex`
-    * assigns dense offsets with one small per-partition count job. Same
-    * deterministic ids as a global `row_number`, no all-rows-to-one-task
-    * sort if a failure storm ever makes an append data-scale. */
+    * Ids are the current max id + `row_number()` in (source_key, data_hash)
+    * order: dense, monotone across appends, and independent of the input
+    * partitioning. The numbering window has no partition key, which costs
+    * nothing here — [[commit]] writes the snapshot from one task anyway. */
   def appendDeadLetters(rows: DataFrame): Unit = {
     val existing = deadLetters
-    val maxId = existing.agg(coalesce(max("id"), lit(0L))).collect()(0).getLong(0)
-    val batchW = org.apache.spark.sql.expressions.Window
-      .partitionBy("source_key", "data_hash").orderBy("error_message")
-    val deduped = rows
+    val maxId = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
+    val payload = Seq("source_key", "data_hash")
+    val fresh = rows
       // D1 holds WITHIN the incoming batch too: several sinks failing on the
       // same payload produce one dead letter (first by error_message).
-      .withColumn("_rn", row_number().over(batchW)).filter(col("_rn") === 1).drop("_rn")
-      .join(existing.select("source_key", "data_hash"), Seq("source_key", "data_hash"), "left_anti")
-    val ordered = deduped
-      .repartitionByRange(col("source_key"), col("data_hash"))
-      .sortWithinPartitions("source_key", "data_hash")
-    val withIdSchema = ordered.schema.add("id", org.apache.spark.sql.types.LongType, nullable = false)
-    val fresh = spark.createDataFrame(
-        ordered.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (maxId + i + 1)) },
-        withIdSchema)
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(payload.map(col): _*).orderBy("error_message")))
+      .filter(col("_rn") === 1).drop("_rn")
+      .join(existing.select(payload.map(col): _*), payload, "left_anti")
+      .withColumn("id", lit(maxId) + row_number().over(Window.orderBy(payload.map(col): _*)))
       .withColumn("attempts", lit(0))
       .withColumn("next_attempt", lit(null).cast("timestamp"))
-    commit("dead_letters", existing.unionByName(fresh.select(existing.columns.map(col): _*)))
+    mutate("dead_letters", Schemas.deadLetterSchema, add = Some(fresh))
   }
 
-  def deleteDeadLetters(ids: Seq[Long]): Unit =
-    commit("dead_letters", deadLetters.filter(!col("id").isin(ids: _*)))
-
-  /** T5 — merge back updated retry state for the given rows. */
-  def updateDeadLetters(updated: DataFrame): Unit = {
-    val cols = deadLetters.columns
-    val untouched = deadLetters.join(updated.select("id"), Seq("id"), "left_anti")
-    commit("dead_letters", untouched.unionByName(updated.select(cols.map(col): _*)))
+  /** T5 — one replay round, settled in ONE commit: the due batch at `now`
+    * (attempts left, backoff elapsed, routable; oldest first, capped) is
+    * offered letter by letter to `attempt(source_key, data)`; delivered
+    * letters are deleted and failed ones take [[Dlq.retryState]] from
+    * `now`. Nothing is committed when nothing was due. Returns (delivered,
+    * failed). */
+  def replayDeadLetters(now: java.sql.Timestamp, maxAttempts: Int,
+      backoffBaseSeconds: Int)(attempt: (String, String) => Boolean): (Long, Long) = {
+    val due = Dlq.replayBatch(Dlq.dueFilter(deadLetters, maxAttempts, lit(now)),
+        Defaults.DlqReplayBatchSize)
+      .select("id", "source_key", "data").collect()
+    val (ok, bad) = due.partition(r => attempt(r.getString(1), r.getString(2)))
+    val badIds = bad.map(_.getLong(0)).toSeq
+    if (due.nonEmpty)
+      mutate("dead_letters", Schemas.deadLetterSchema,
+        keep = !col("id").isin(ok.map(_.getLong(0)).toSeq: _*),
+        add = Option.when(badIds.nonEmpty)(
+          Dlq.retryState(deadLetters.filter(col("id").isin(badIds: _*)), lit(now),
+            backoffBaseSeconds).drop("backoff_seconds")),
+        key = Seq("id"))
+    (ok.length.toLong, bad.length.toLong)
   }
-
-  def dueDeadLetters(maxAttempts: Int, batchSize: Int = 25): DataFrame =
-    Dlq.replayBatch(Dlq.dueFilter(deadLetters, maxAttempts, current_timestamp()), batchSize)
 
   /** Purge dead letters older than the retention window (reference
     * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
@@ -196,12 +230,10 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * ONE aggregate — rows minus rows [[Dlq.retained]] keeps — so a replay
     * cycle with nothing to purge costs one job, not two full counts. */
   def purgeExpiredDeadLetters(now: java.sql.Timestamp,
-      retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long = {
-    val before = deadLetters
-    val purged = before
-      .agg(count(lit(1)) - count_if(Dlq.retained(lit(now), retentionDays)))
-      .head().getLong(0)
-    if (purged > 0) commit("dead_letters", Dlq.purgeExpired(before, lit(now), retentionDays))
+      retentionDays: Int = Defaults.DlqRetentionDays): Long = {
+    val keep = Dlq.retained(lit(now), retentionDays)
+    val purged = deadLetters.agg(count(lit(1)) - count_if(keep)).head().getLong(0)
+    if (purged > 0) mutate("dead_letters", Schemas.deadLetterSchema, keep = keep)
     purged
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.{EnvironmentConfig, TrackingObject}
-import graft.ops.{Dlq, Envelope, Incremental, StateOps, Windows}
+import graft.ops.{Dlq, Envelope, Incremental, Windows}
 import graft.sinks.{Amqp, ExportFailure, ExportMeta, Sinks}
 import graft.state.ParquetStateStore
 
@@ -184,7 +184,7 @@ final class ChangeRelay(
             .withColumn("tracking_object_name", lit(obj.name))
             .withColumn("environment_name", lit(config.name))
             .withColumn("database_name", lit(obj.database))
-            .withColumn("data_hash", sha2(col("data"), 256))
+            .withColumn("data_hash", Dlq.dataHash(col("data")))
             .withColumn("timestamp", current_timestamp())
           store.appendDeadLetters(fdf)
         }
@@ -198,10 +198,10 @@ final class ChangeRelay(
     (exported, newVersion)
   }
 
-  /** §3.2 — dead-letter replay cycle: retention purge, then due batch,
-    * attempt, delete on success / widen backoff on failure (T5). `attempt`
-    * is injectable so tests can simulate endpoint recovery. Purge runs
-    * FIRST so a letter past retention is never re-attempted — the
+  /** §3.2 — dead-letter replay cycle: retention purge, then one
+    * [[ParquetStateStore.replayDeadLetters]] round (T5), all at `nowUtc`.
+    * `attempt` is injectable so tests can simulate endpoint recovery. Purge
+    * runs FIRST so a letter past retention is never re-attempted — the
     * reference purges in the same service loop
     * (DeadLetterService.cs:148-159). */
   def replayCycle(attempt: String => Boolean, nowUtc: java.sql.Timestamp): (Long, Long) =
@@ -215,20 +215,8 @@ final class ChangeRelay(
   def replayCycle(attempt: (String, String) => Boolean,
                   nowUtc: java.sql.Timestamp): (Long, Long) = {
     store.purgeExpiredDeadLetters(nowUtc)
-    val due = store.dueDeadLetters(config.deadLetterMaxReplayAttempts,
-      graft.model.Defaults.DlqReplayBatchSize).collect()
-    val (ok, bad) = due.partition(r =>
-      attempt(r.getAs[String]("source_key"), r.getAs[String]("data")))
-    if (ok.nonEmpty) store.deleteDeadLetters(ok.map(_.getAs[Long]("id")).toSeq)
-    if (bad.nonEmpty) {
-      val badIds = bad.map(_.getAs[Long]("id")).toSeq
-      val updated = Dlq.retryState(
-        store.deadLetters.filter(col("id").isin(badIds: _*)),
-        lit(nowUtc), config.deadLetterReplayBackoffSeconds)
-        .drop("backoff_seconds")
-      store.updateDeadLetters(updated)
-    }
-    (ok.length.toLong, bad.length.toLong)
+    store.replayDeadLetters(nowUtc, config.deadLetterMaxReplayAttempts,
+      config.deadLetterReplayBackoffSeconds)(attempt)
   }
 }
 
@@ -283,30 +271,14 @@ object ChangeRelay {
             // target "amqp://host:port/exchange", routing key = the object
             // name, correlation id = the batch group (replayable).
             Sinks.prepareBrokerMessage("rabbitmq", json, ep.headers).flatMap { body =>
-              // parse defensively: a missing port or non-numeric port is a
-              // CONFIG error and must dead-letter like the missing-slash
-              // case below — a MatchError/NumberFormatException here would
-              // escape the Either channel and fail the whole task (r19
-              // advice)
-              ep.target.stripPrefix("amqp://").split("/", 2) match {
-                case Array(hostPort, exchange) =>
-                  hostPort.split(":", 2) match {
-                    case Array(h, p) if h.nonEmpty =>
-                      p.toIntOption.filter(n => n > 0 && n <= 65535) match {
-                        case Some(port) =>
-                          Amqp.publish(h, port, exchange,
-                            routingKey = s"${plan.database}.${plan.objectName}",
-                            body = body, correlationId = g,
-                            headers = ep.headers).map(_ => ())
-                        case None =>
-                          Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-                      }
-                    case _ =>
-                      Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-                  }
-                case _ =>
-                  Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-              }
+              Amqp.parseTarget(ep.target)
+                .toRight(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
+                .flatMap { case (host, port, exchange) =>
+                  Amqp.publish(host, port, exchange,
+                    routingKey = s"${plan.database}.${plan.objectName}",
+                    body = body, correlationId = g,
+                    headers = ep.headers).map(_ => ())
+                }
             }
           case broker =>
             Sinks.prepareBrokerMessage(broker, json, ep.headers).map(_ => ())

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.model.Defaults
 import java.sql.Timestamp
 
 /** T5 (stateful retry with widening backoff) as arbitrary stateful
@@ -26,13 +27,14 @@ object StatefulRetry {
       backoffSeconds: Long, nextAttemptEpoch: Long, gaveUp: Boolean,
       resolved: Boolean)
 
-  val MaxBackoffSeconds = 21600L // 6 h cap — BASELINE.md DLQ replay row
+  val MaxBackoffSeconds: Long = Defaults.DlqBackoffCapSeconds.toLong
 
   /** Fold each key's attempts (event-time ordered within the batch) through
     * the per-key state. Works identically over a batch Dataset (single
     * group pass) and a stream (state carried across micro-batches). */
-  def decide(events: Dataset[Attempt], baseBackoffSeconds: Long = 60L,
-             maxAttempts: Int = 5): Dataset[RetryDecision] = {
+  def decide(events: Dataset[Attempt],
+             baseBackoffSeconds: Long = Defaults.DlqBackoffBaseSeconds.toLong,
+             maxAttempts: Int = Defaults.DlqMaxReplayAttempts): Dataset[RetryDecision] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.sourceKey)
       .flatMapGroupsWithState[RetryState, RetryDecision](

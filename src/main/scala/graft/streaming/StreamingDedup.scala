@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import graft.ops.DedupOps
 import graft.state.ParquetStateStore
 
@@ -19,13 +19,13 @@ import graft.state.ParquetStateStore
   * without a driver-side log:
   *   - survivors write `overwrite` into `survivorsDir/batch=<id>` — a
   *     replayed batch rewrites its own directory idempotently;
-  *   - the state snapshot carries `committed_batch` IN the same table as
-  *     the buckets, so "which batch produced this state" and the state
-  *     itself commit in ONE atomic pointer flip ([[ParquetStateStore]]) —
-  *     two separate commits could crash apart and leave a batch half-applied
+  *   - the bucket state and the id of the batch that produced it commit in
+  *     ONE atomic pointer flip ([[ParquetStateStore.commitBatch]]) — two
+  *     separate commits could crash apart and leave a batch half-applied
   *     (admission against post-batch state recomputes DIFFERENT survivors);
-  *   - a batch id at-or-below `committed_batch` short-circuits: its
-  *     survivors directory and state contribution already landed.
+  *   - a batch id at-or-below [[ParquetStateStore.committedBatch]]
+  *     short-circuits: its survivors directory and state contribution
+  *     already landed.
   *
   * Scale: state is one row per distinct (band, bucket) — signatures, not
   * corpus rows — and each micro-batch does hash semi/anti joins against it
@@ -33,26 +33,18 @@ import graft.state.ParquetStateStore
 object StreamingDedup {
 
   private val SeenTable = "seen_buckets"
-  private val seenSchema = new StructType()
-    .add("band", IntegerType).add("bucket", StringType)
-    .add("committed_batch", LongType)
+  private val seenSchema = new StructType().add("band", IntegerType).add("bucket", StringType)
 
   /** Admitted-state read, shaped for [[DedupOps.incrementalNearDedup]]. */
   def seenBuckets(store: ParquetStateStore): DataFrame =
-    store.read(SeenTable, seenSchema).select(col("band"), col("bucket"))
-
-  private def committedBatch(store: ParquetStateStore): Long = {
-    val r = store.read(SeenTable, seenSchema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L))).collect()(0)
-    r.getLong(0)
-  }
+    store.read(SeenTable, seenSchema)
 
   /** Run one micro-batch's admission; exposed for direct reuse and for the
     * spec's batch-oracle replay. Returns the survivor count. */
   def admitBatch(store: ParquetStateStore, batch: DataFrame, batchId: Long,
       survivorsDir: String, idCol: String, textCol: String,
       numPerms: Int, bands: Int): Long = {
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
+    if (batchId <= store.committedBatch(SeenTable)) return 0L // replay of a landed batch
     val (survivors, updatedSeen) = DedupOps.incrementalNearDedup(
       batch, seenBuckets(store), idCol, textCol, numPerms, bands)
     // Idempotent per-batch output first, atomic state commit second: a
@@ -60,8 +52,7 @@ object StreamingDedup {
     // rewrites the identical directory.
     survivors.write.mode(SaveMode.Overwrite)
       .parquet(s"$survivorsDir/batch=$batchId")
-    store.commit(SeenTable,
-      updatedSeen.withColumn("committed_batch", lit(batchId)))
+    store.commitBatch(SeenTable, updatedSeen, batchId)
     survivors.count()
   }
 
@@ -71,13 +62,9 @@ object StreamingDedup {
       survivorsDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       numPerms: Int = 8, bands: Int = 4): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-neardedup-${survivorsDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol,
-          numPerms, bands)
-        ()
-      }
-      .start()
+    ForeachBatch.start(stream,
+        s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) =>
+        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
+    }
 }

@@ -27,10 +27,10 @@ import graft.state.ParquetStateStore
   * Exactly-once across foreachBatch replays — the [[StreamingDedup]] /
   * [[StreamingScd2]] discipline: scheduled rows write `overwrite` into
   * `outDir/batch=<id>` (a replay rewrites the directory identically
-  * because the state it reads is unchanged until the commit), and
-  * `committed_batch` rides IN the state snapshot so progress and state
-  * flip in one atomic pointer commit; a batch at-or-below the committed id
-  * short-circuits.
+  * because the state it reads is unchanged until the commit), and the
+  * batch id commits WITH the state ([[ParquetStateStore.commitBatch]]) so
+  * progress and state flip in one atomic pointer commit; a batch
+  * at-or-below the committed id short-circuits.
   *
   * Batch-parity contract (spec-pinned with a randomized contiguous split):
   * when batches arrive id-ascending per domain (the discovery stream's
@@ -40,18 +40,11 @@ import graft.state.ParquetStateStore
 object StreamingFrontier {
 
   private val Table = "frontier_domains"
-  private val schema = new StructType()
-    .add("domain", StringType).add("n_sched", LongType)
-    .add("committed_batch", LongType)
+  private val schema = new StructType().add("domain", StringType).add("n_sched", LongType)
 
   /** Per-domain slot consumption (domain, n_sched). */
   def domainState(store: ParquetStateStore): DataFrame =
-    store.read(Table, schema).select(col("domain"), col("n_sched"))
-
-  private def committedBatch(store: ParquetStateStore): Long =
     store.read(Table, schema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L)))
-      .collect()(0).getLong(0)
 
   /** Apply one micro-batch (columns `domain`, `doc_id`); returns rows
     * scheduled. Exposed for direct reuse and the spec's split-fold oracle. */
@@ -59,7 +52,7 @@ object StreamingFrontier {
                  outDir: String, maxPerDomain: Int = 8,
                  delaySec: Int = 5): Long = {
     require(maxPerDomain >= 1 && delaySec >= 0)
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
+    if (batchId <= store.committedBatch(Table)) return 0L // replay of a landed batch
     // The batch feeds the draw AND the state update — materialize once
     // (round-4 rule d; micro-batch-sized rows).
     val b = batch.select(col("domain").cast("string").as("domain"),
@@ -86,7 +79,7 @@ object StreamingFrontier {
       .select(col("domain"),
         (col("n0") + coalesce(col("_t"), lit(0L))).as("n_sched"))
       .unionByName(st.join(drawn, Seq("domain"), "left_anti"))
-    store.commit(Table, newState.withColumn("committed_batch", lit(batchId)))
+    store.commitBatch(Table, newState, batchId)
     sched.count()
   }
 
@@ -105,12 +98,9 @@ object StreamingFrontier {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             outDir: String, checkpointDir: String, maxPerDomain: Int = 8,
             delaySec: Int = 5): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-frontier-${outDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ForeachBatch.start(stream,
+        s"graft-frontier-${outDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) =>
         applyBatch(store, batch, batchId, outDir, maxPerDomain, delaySec)
-        ()
-      }
-      .start()
+    }
 }

@@ -30,10 +30,10 @@ import graft.state.ParquetStateStore
   * Exactly-once across foreachBatch replays — the [[StreamingDedup]]
   * discipline: closed rows write `overwrite` into `closedDir/batch=<id>`
   * (a replayed batch rewrites its own directory identically, because the
-  * state it reads is unchanged until the commit), and `committed_batch`
-  * rides IN the open-state snapshot so state and progress flip in ONE
-  * atomic pointer commit; a batch at-or-below `committed_batch`
-  * short-circuits.
+  * state it reads is unchanged until the commit), and the batch id commits
+  * WITH the open-state snapshot ([[ParquetStateStore.commitBatch]]) so
+  * state and progress flip in ONE atomic pointer commit; a batch
+  * at-or-below the committed id short-circuits.
   *
   * Contract (spec-pinned): [[intervals]] — the closed dirs plus the open
   * state — equals the one-shot [[Incremental.scd2Intervals]] over the
@@ -42,25 +42,19 @@ import graft.state.ParquetStateStore
 object StreamingScd2 {
 
   private val OpenTable = "scd2_open"
-  private val openSchema = new StructType()
-    .add("k", StringType).add("valid_from", LongType).add("op", StringType)
-    .add("committed_batch", LongType)
+  private val openSchema =
+    new StructType().add("k", StringType).add("valid_from", LongType).add("op", StringType)
 
   /** The live-version table: one open interval per non-deleted key, plus
     * current tombstones (op = D) so "deleted" ≠ "never existed". */
   def openIntervals(store: ParquetStateStore): DataFrame =
-    store.read(OpenTable, openSchema).select(col("k"), col("valid_from"), col("op"))
-
-  private def committedBatch(store: ParquetStateStore): Long =
     store.read(OpenTable, openSchema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L)))
-      .collect()(0).getLong(0)
 
   /** Apply one micro-batch (columns `k`, `id`, `op`); exposed for direct
     * reuse and the spec's batch-fold oracle. Returns rows closed. */
   def applyBatch(store: ParquetStateStore, batch: DataFrame, batchId: Long,
                  closedDir: String): Long = {
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
+    if (batchId <= store.committedBatch(OpenTable)) return 0L // replay of a landed batch
     // The batch feeds the interval window AND the first-new-id rollup —
     // materialize once (round-4 rule d; micro-batch-sized rows).
     val b = batch.select(col("k").cast("string").as("k"),
@@ -86,8 +80,7 @@ object StreamingScd2 {
     newClosed.write.mode(SaveMode.Overwrite).parquet(s"$closedDir/batch=$batchId")
     val newOpen = iv.filter(col("valid_to").isNull)
       .select(col("k"), col("valid_from"), col("op"))
-    store.commit(OpenTable,
-      stillOpen.unionByName(newOpen).withColumn("committed_batch", lit(batchId)))
+    store.commitBatch(OpenTable, stillOpen.unionByName(newOpen), batchId)
     newClosed.count()
   }
 
@@ -115,12 +108,8 @@ object StreamingScd2 {
     * One query per state store — application is ordered by micro-batch. */
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             closedDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-scd2-${closedDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(store, batch, batchId, closedDir)
-        ()
-      }
-      .start()
+    ForeachBatch.start(stream,
+        s"graft-scd2-${closedDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) => applyBatch(store, batch, batchId, closedDir)
+    }
 }

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   * library carries no profiler mains and no A/B-only switches: operator
   * defaults are constants, overridable only through function parameters,
   * and the one engine setting read from the session is the deployment's
-  * checkpoint mode. */
+  * checkpoint mode. State commit paths each have one home: micro-batch
+  * progress lives in the state store, and the distributed dense index in
+  * the relay's batch numbering. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src", "main", "scala")
@@ -47,5 +49,13 @@ class SourceGuardSpec extends AnyFunSuite {
       """spark\.graft\.(\w+)""".r.findAllMatchIn(text).map(_.group(1))
     }.toSet
     assert(keys == Set("checkpointMode"))
+  }
+
+  test("batch progress and distributed dense ids each have one home") {
+    def holders(token: String) = sources(mainRoot).collect {
+      case (p, text) if text.contains(token) => p.getFileName.toString
+    }
+    assert(holders("committed_batch") == Seq("Stores.scala"))
+    assert(holders(".rdd.zipWithIndex") == Seq("Windows.scala"))
   }
 }

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import scala.util.Random
 
-/** Invariants of the distributed dead-letter id assignment
-  * (range-partition + in-partition sort + zipWithIndex — no global
-  * single-partition window): ids must come out exactly as the old global
-  * `row_number` produced them, independent of input partitioning. */
+/** Invariants of the dead-letter id assignment — the current max id plus
+  * `row_number()` in (source_key, data_hash) order: ids are dense, unique
+  * and monotone across appends, D1 dedup holds, and the same rows get the
+  * same ids however the input is partitioned. */
 class StoreIdSpec extends SparkSpec {
   import spark.implicits._
 
@@ -48,5 +48,51 @@ class StoreIdSpec extends SparkSpec {
     }
     assert(tableFor(1) == tableFor(7),
       "same rows must get the same ids regardless of partitioning")
+  }
+
+  test("an append submits no zipWithIndex or range-sample job") {
+    val store = new ParquetStateStore(spark,
+      Files.createTempDirectory("graft-ids-jobs").resolve("state").toString)
+    store.appendDeadLetters(randomRows(new Random(3), 20))
+    val group = s"dlq-append-${System.nanoTime()}"
+    // Call sites of the append's jobs: every stage's, plus the SQL
+    // execution's (jobs adaptive execution submits from its own threads
+    // carry no caller frames in their stages).
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val execIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execSites.put(x.executionId.toString, x.details)
+          case _ =>
+        }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id")) {
+          j.stageInfos.foreach(si => sites.add(si.details))
+          Option(j.properties.getProperty("spark.sql.execution.id")).foreach(execIds.add)
+        }
+    }
+    spark.sparkContext.setJobGroup(group, "dead-letter append")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.appendDeadLetters(randomRows(new Random(5), 40).repartition(3))
+      // The listener bus is async: wait until the recorded count stops moving.
+      var last = -1
+      while (sites.size != last) { last = sites.size; Thread.sleep(200) }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.clearJobGroup()
+    }
+    import scala.jdk.CollectionConverters._
+    val all = sites.asScala.toSeq ++
+      execIds.asScala.toSeq.flatMap(id => Option(execSites.get(id)))
+    assert(all.exists(_.contains("appendDeadLetters")), "the append's jobs must be observed")
+    // On a small append adaptive execution coalesces a range shuffle to one
+    // partition, so a range sample + zipWithIndex numbering shows up as the
+    // jobs of a `Dataset.rdd` execution rather than under its own names.
+    for (probe <- Seq("zipWithIndex", "RangePartitioner", "Dataset.rdd"))
+      assert(!all.exists(_.contains(probe)), s"a job ran from $probe")
   }
 }

@@ -203,6 +203,69 @@ class RelaySpec extends SparkSpec {
     assert(store.deadLetters.count() == 0)
   }
 
+  private def letters(rows: (String, java.sql.Timestamp)*): DataFrame =
+    rows.map { case (k, t) => (k, "orders", "prod", "db0", s"h-$k", "{}", "boom", t) }
+      .toDF("source_key", "tracking_object_name", "environment_name",
+        "database_name", "data_hash", "data", "error_message", "timestamp")
+
+  test("replay judges due-ness at the clock it is given, not the wall clock") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val t = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    def at(seconds: Int) = new java.sql.Timestamp(t.getTime + seconds * 1000L)
+    store.appendDeadLetters(letters("k1" -> t))
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val attempted = scala.collection.mutable.ArrayBuffer[Int]()
+    def replayAt(seconds: Int, delivers: Boolean) =
+      relay.replayCycle(_ => { attempted += seconds; delivers }, at(seconds))
+    assert(replayAt(0, delivers = false) == ((0L, 1L)))  // fails at T: next attempt T+60 s
+    assert(replayAt(30, delivers = true) == ((0L, 0L)))  // backoff not yet elapsed
+    assert(replayAt(61, delivers = true) == ((1L, 0L)))
+    assert(attempted.toSeq == Seq(0, 61))
+    assert(store.deadLetters.count() == 0)
+  }
+
+  test("a replay with one delivered and one failing letter settles in one commit") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val now = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    val dayBefore = java.sql.Timestamp.valueOf("2024-01-14 00:00:00")
+    store.appendDeadLetters(letters("k-ok" -> dayBefore, "k-bad" -> dayBefore))
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val before = store.commitCount
+    assert(relay.replayCycle(k => k == "k-ok", now) == ((1L, 1L)))
+    assert(store.commitCount - before == 1, "delete and retry state land in one commit")
+    val left = store.deadLetters.collect()
+    assert(left.map(_.getAs[String]("source_key")).toSeq == Seq("k-bad"))
+    assert(left.head.getAs[Int]("attempts") == 1)
+    assert(left.head.getAs[java.sql.Timestamp]("next_attempt")
+      .equals(java.sql.Timestamp.valueOf("2024-01-15 00:01:00")))
+  }
+
+  test("malformed AMQP targets dead-letter before any socket opens") {
+    assert(graft.sinks.Amqp.parseTarget("amqp://broker:5672/events")
+      .contains(("broker", 5672, "events")))
+    val malformed = Seq(
+      "amqp://127.0.0.1:5672",        // no slash before the exchange
+      "amqp://127.0.0.1/events",      // no port
+      "amqp://127.0.0.1:0/events",    // port out of range
+      "amqp://127.0.0.1:abc/events")  // non-numeric port
+    for (target <- malformed) {
+      assert(graft.sinks.Amqp.parseTarget(target).isEmpty, target)
+      val dir = tmp()
+      val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+      val relay = new ChangeRelay(spark, store,
+        cfg(Seq(SinkEndpoint("mq1", "rabbitmq", target))), None,
+        horizonOf = _ => 1000L, performAmqp = true)
+      store.setWatermark("prod", "orders", 0L)
+      val (_, v) = relay.runCycle(obj,
+        outboxDf(Seq((1L, 1L, "I", 1.0, """{"k":1}"""))), "20240115000000")
+      assert(v == 1L && store.getWatermark("prod", "orders").contains(1L), target)
+      val errors = store.deadLetters.select("error_message").as[String].collect()
+      assert(errors.length == 1 && errors.head.contains("bad amqp target"), target)
+    }
+  }
+
   test("pause holds the object; resume releases it; reset re-seeds") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
